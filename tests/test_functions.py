@@ -154,6 +154,25 @@ def test_limit_warn_caps_and_warns(spark):
         assert not w
 
 
+def test_limit_warn_caps_the_rows_it_counted(spark):
+    """The capped frame reads the rows the guard counted: a frame whose
+    every evaluation draws new values returns the same rows each time."""
+    import random
+
+    draw = F.udf(lambda _i: random.random(), "double").asNondeterministic()
+    df = spark.range(40).withColumn("r", draw("id"))
+    with warnings.catch_warnings(record=True) as w:
+        warnings.simplefilter("always")
+        capped = limit_warn(df, n=10, seed=7)
+        assert any("40 rows" in str(x.message) for x in w)
+    first = sorted(map(tuple, capped.collect()))
+    assert len(first) == 10
+    assert sorted(map(tuple, capped.collect())) == first
+    whole = limit_warn(df, n=1000)
+    rows = sorted(map(tuple, whole.collect()))
+    assert len(rows) == 40 and sorted(map(tuple, whole.collect())) == rows
+
+
 def test_sample_with_replacement_non_orderable_column(spark):
     # ADVICE r2 core.py:149 — the with-replacement window previously
     # ordered by every column and crashed on map-typed columns

@@ -26,13 +26,18 @@ def _drain_and_stop(q, timeout_s: float = 120.0) -> None:
 
     deadline = _time.time() + timeout_s
     seen_data = False
-    while _time.time() < deadline:
-        p = q.lastProgress
-        if p is not None:
+    drained = False
+    while not drained and _time.time() < deadline:
+        # a failed query raises its own error here, not a timeout later
+        if (err := q.exception()) is not None:
+            raise err
+        # every retained batch, not only the newest: a fast stream can
+        # run its data batch and a zero-input one between two polls
+        for p in q.recentProgress:
             if p["numInputRows"] > 0:
                 seen_data = True
             elif seen_data:
-                break
+                drained = True
         _time.sleep(0.2)
     assert seen_data, "stream never processed any input"
     q.stop()

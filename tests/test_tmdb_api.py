@@ -3,8 +3,10 @@ answers from FIXTURES.md §5 — no live network."""
 
 from __future__ import annotations
 
+import io
 import json
 import threading
+import warnings
 from http.server import BaseHTTPRequestHandler, HTTPServer
 from urllib.parse import urlparse
 
@@ -12,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from wikidatabots_spark.functions.core import apply_elementwise
+from wikidatabots_spark.sinks.rdf import print_rdf_statements
 from wikidatabots_spark.sources.tmdb_api import tmdb_exists, tmdb_find
 
 # FIXTURES.md §5 pinned answers
@@ -21,10 +24,13 @@ EXISTS = {("movie", 2), ("movie", 3), ("collection", 87255)}
 
 
 class _Handler(BaseHTTPRequestHandler):
+    served = 0  # requests answered; the server handles one at a time
+
     def log_message(self, *a):
         pass
 
     def do_GET(self):
+        _Handler.served += 1
         url = urlparse(self.path)
         parts = url.path.strip("/").split("/")
         if parts[0] == "find":
@@ -80,6 +86,38 @@ def test_tmdb_exists_pinned_answers(spark, tmdb_server):
     }
     # FIXTURES.md §5: [0,2,3,4,3106] → [false,true,true,false,false]
     assert out == {0: False, 2: True, 3: True, 4: False, 3106: False}
+
+
+@pytest.mark.parametrize("limit", [250, 5])
+def test_rdf_sink_evaluates_its_frame_once(spark, tmdb_server, limit):
+    """The guard's count and the printed rows come from one evaluation:
+    one HTTP request per input row, under the cap and over it."""
+    ids = list(range(20))
+    checked = tmdb_exists(
+        spark.createDataFrame([(i,) for i in ids], "id long"),
+        "id", "movie", base_url=tmdb_server,
+    )
+    # filtered on the looked-up column, as the mains filter on it, so a
+    # count cannot prune the lookups away; every lookup here answers
+    frame = checked.where(F.col("exists").isNotNull()).select(
+        F.format_string('wd:Q%d wdt:P4947 "%s" .', "id", F.col("exists").cast("string"))
+        .alias("rdf_statement")
+    )
+    rows = {f'wd:Q{i} wdt:P4947 "{str(("movie", i) in EXISTS).lower()}" .' for i in ids}
+    buf = io.StringIO()
+    before = _Handler.served
+    with warnings.catch_warnings(record=True) as w:
+        warnings.simplefilter("always")
+        n = print_rdf_statements(frame, limit=limit, file=buf, seed=1)
+    assert _Handler.served - before == len(ids)
+    lines = buf.getvalue().splitlines()
+    assert n == len(lines) == min(limit, len(ids))
+    assert len(set(lines)) == n and set(lines) <= rows
+    warned = [str(x.message) for x in w if "rows, limiting" in str(x.message)]
+    if limit < len(ids):
+        assert warned == [f"rdf statements has {len(ids)} rows, limiting to {limit}"]
+    else:
+        assert not warned and set(lines) == rows
 
 
 def test_apply_elementwise_none_passthrough(spark):

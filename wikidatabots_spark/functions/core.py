@@ -277,21 +277,26 @@ def limit_warn(
     desc: str = "frame",
     seed: int | None = None,
 ) -> DataFrame:
-    """Warn + cap when the frame exceeds ``n`` rows.
+    """Count ``df`` and cap it to ``n`` rows, over the same rows.
 
     Polars ``limit()`` guard (polars_utils.py:83-100): if count > n, emit a
-    warning and return a sample (or head) of n rows. Needs a driver-side
-    ``count()`` action — same eager barrier the reference has (its guard is
-    an eager ``map_batches``). The count is cheap: Catalyst collapses it to
-    a partial-count + single-row exchange.
+    warning and return a sample (or head) of n rows. The reference counts
+    and samples a frame it has already materialised; here a lazy
+    ``localCheckpoint`` fences ``df``, the ``count()`` action materialises
+    the fence, and the returned frame — capped or not — reads the fenced
+    rows. So the upstream plan runs once, HTTP lookups included, and the
+    warned count describes exactly the rows the caller goes on to read.
+    A bare count would replay the whole lineage and the caller's action
+    would replay it again, possibly with different rows.
     """
-    cnt = df.count()
+    fenced = df.localCheckpoint(eager=False)
+    cnt = fenced.count()
     if cnt <= n:
-        return df
+        return fenced
     warnings.warn(f"{desc} has {cnt} rows, limiting to {n}", stacklevel=2)
     if sample:
-        return sample_n(df, n, seed=seed)
-    return df.limit(n)
+        return sample_n(fenced, n, seed=seed)
+    return fenced.limit(n)
 
 
 def apply_elementwise(fn, return_type, none_passthrough: bool = True):

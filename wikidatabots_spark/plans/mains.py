@@ -13,8 +13,10 @@ opencritic main does the same with 2 (wd_opencritic.py:216-222). Here:
 
 The union is ``unionByName`` over identically-shaped one-column frames —
 Catalyst plans it as a single multi-child Union stage; each child keeps
-its own pushed filters, and the sink's count guard is the only extra
-action (same eager barrier the reference pays, SURVEY §2.6 O4).
+its own pushed filters. The sink's count guard fences the union with a
+local checkpoint, so the plan is evaluated once and the guard's count and
+the printed rows come from that one evaluation (the reference likewise
+counts the frame it has collected, SURVEY §2.6 O4).
 """
 
 from __future__ import annotations

@@ -19,6 +19,26 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
+# A top-k at or above this k plans as Sort + limit instead of
+# TakeOrderedAndProject, whose guava TopKSelector pre-allocates a 2k-slot
+# buffer per task: a k of 10^9 over a ten-row frame exhausts any heap and
+# takes the JVM down. Below it — every guard-sized sample, e.g. the RDF
+# sink's 250 — the plan is unchanged.
+TOPK_SORT_FALLBACK = 1_000_000
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Half the host's RAM, capped at 32g (32g when ``MemTotal`` cannot be
+    read). A fixed 32g outgrew smaller hosts: the kernel OOM-killed the
+    JVM instead of Spark raising a Java heap error."""
+    cap_mib = 32 * 1024
+    try:
+        with open(meminfo) as f:
+            kib = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return f"{cap_mib}m"
+    return f"{min(kib // 2048, cap_mib)}m"
+
 
 def get_spark(
     app_name: str = "wikidatabots-spark",
@@ -80,9 +100,16 @@ def get_spark(
         # local[N] puts all executor work on the driver heap: 32 task
         # threads in 8g spent whole stages in GC mid-suite (measured 2-3x
         # per-query swings); 32g on the 128 GiB test box keeps GC out of
-        # the numbers. On a real cluster executor memory is sized per-node
-        # and this knob only feeds the planner/collects.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        # the numbers, and half the RAM keeps a smaller host alive. On a
+        # real cluster executor memory is sized per-node and this knob
+        # only feeds the planner/collects.
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
+        .config(
+            "spark.sql.execution.topKSortFallbackThreshold", str(TOPK_SORT_FALLBACK)
+        )
         # This host exhibits guest-invisible multi-minute stalls (the
         # bench protocol documents 1.4s ↔ 17s swings at idle loadavg;
         # r12 captured a 245s full-JVM freeze in a -s pytest log). At

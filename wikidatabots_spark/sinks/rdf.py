@@ -5,8 +5,9 @@ Contract preserved:
   at plan time via ``df.schema`` (no execution), mirroring the
   reference's ``collect_schema()`` assertion (:115)
 - row cap (default 250): warn + random-sample down when exceeded (:116 →
-  :83-100) — requires one driver-side count, the same eager barrier the
-  reference pays
+  :83-100) — ``limit_warn`` fences the frame with a local checkpoint, so
+  the guard's count, the sample and the printed rows all come from one
+  evaluation of the upstream plan, as in the reference
 - rows stream to the file via ``toLocalIterator`` so the driver never
   holds more than a partition (matters if the cap is lifted at scale)
 """

@@ -789,68 +789,71 @@ def dedup_graph_maintenance(
             # signature materialization + prefix collect below (guide
             # §2.6); joined before first use either branch.
             _labels_pool = ThreadPoolExecutor(max_workers=1)
-            _labels_fut = _labels_pool.submit(
-                lambda: pushdown_fence(
-                    _merged_labels(spark, labels_path, before_batch=batch_id)
+            try:
+                _labels_fut = _labels_pool.submit(
+                    lambda: pushdown_fence(
+                        _merged_labels(spark, labels_path, before_batch=batch_id)
+                    )
                 )
-            )
-            if op_col in batch.columns and deletes is not None:
-                prior_labels = _labels_fut.result()
-                _pmark(f"graph b{batch_id}: merged-labels plan built")
-            members = None
-            recomputed_del = None
-            if deletes is not None:
-                dd = deletes.select(F.col("doc_id").alias("node"))
-                affected = (
-                    prior_labels.join(dd, "node", "left_semi")
-                    .select("component")
+                if deletes is not None:
+                    prior_labels = _labels_fut.result()
+                    _pmark(f"graph b{batch_id}: merged-labels plan built")
+                members = None
+                recomputed_del = None
+                if deletes is not None:
+                    dd = deletes.select(F.col("doc_id").alias("node"))
+                    affected = (
+                        prior_labels.join(dd, "node", "left_semi")
+                        .select("component")
+                        .distinct()
+                    )
+                    members = pushdown_fence(
+                        prior_labels.join(affected, "component", "left_semi")
+                    )
+                    survivors = members.join(dd, "node", "left_anti").select(
+                        F.col("node").alias("doc_id")
+                    )
+                    # band rows of surviving members of affected components
+                    # only: buckets never span components, so probe-time
+                    # anchor ranks inside this slice equal the full
+                    # post-deletion ranks (components_after_delete theorem)
+                    sub = (
+                        read_band_index(
+                            spark, index_path, tomb_path, before_batch=batch_id
+                        )
+                        .join(deletes, "doc_id", "left_anti")
+                        .join(survivors, "doc_id", "left_semi")
+                    )
+                    recomputed_del = pushdown_fence(
+                        connected_components(band_pairs(sub)).select(
+                            "node", "component"
+                        )
+                    )
+                    # current view for the insertion step = prior labels
+                    # with affected components replaced by their recompute
+                    post_labels = pushdown_fence(
+                        prior_labels.join(
+                            affected, "component", "left_anti"
+                        ).unionByName(recomputed_del)
+                    )
+                # insertion probe: partition-pruned to the prefixes this
+                # batch's band hashes can land in (≤ 16**_BAND_PFX_LEN
+                # literals — a bounded metadata collect, not data)
+                pfx = [
+                    r.p
+                    for r in bands_new.select(_band_pfx().alias("p"))
                     .distinct()
-                )
-                members = pushdown_fence(
-                    prior_labels.join(affected, "component", "left_semi")
-                )
-                survivors = members.join(dd, "node", "left_anti").select(
-                    F.col("node").alias("doc_id")
-                )
-                # band rows of surviving members of affected components
-                # only: buckets never span components, so probe-time
-                # anchor ranks inside this slice equal the full
-                # post-deletion ranks (components_after_delete theorem)
-                sub = (
-                    read_band_index(
-                        spark, index_path, tomb_path, before_batch=batch_id
-                    )
-                    .join(deletes, "doc_id", "left_anti")
-                    .join(survivors, "doc_id", "left_semi")
-                )
-                recomputed_del = pushdown_fence(
-                    connected_components(band_pairs(sub)).select(
-                        "node", "component"
-                    )
-                )
-                # current view for the insertion step = prior labels
-                # with affected components replaced by their recompute
-                post_labels = pushdown_fence(
-                    prior_labels.join(
-                        affected, "component", "left_anti"
-                    ).unionByName(recomputed_del)
-                )
-            # insertion probe: partition-pruned to the prefixes this
-            # batch's band hashes can land in (≤ 16**_BAND_PFX_LEN
-            # literals — a bounded metadata collect, not data)
-            pfx = [
-                r.p
-                for r in bands_new.select(_band_pfx().alias("p"))
-                .distinct()
-                .collect()
-            ]
-            _pmark(f"graph b{batch_id}: sign + pfx collect")
-            if deletes is None:
-                # insert-only batch: the merged-labels fence build just
-                # overlapped with the signature job above — join it here
-                post_labels = _labels_fut.result()
-                _pmark(f"graph b{batch_id}: merged-labels plan joined")
-            _labels_pool.shutdown(wait=False)
+                    .collect()
+                ]
+                _pmark(f"graph b{batch_id}: sign + pfx collect")
+                if deletes is None:
+                    # insert-only batch: the merged-labels fence build just
+                    # overlapped with the signature job above — join it here
+                    post_labels = _labels_fut.result()
+                    _pmark(f"graph b{batch_id}: merged-labels plan joined")
+            finally:
+                # also on a failing batch: the pool must not outlive it
+                _labels_pool.shutdown(wait=False)
             prior_idx = read_band_index(
                 spark,
                 index_path,
