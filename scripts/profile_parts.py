@@ -43,7 +43,12 @@ def main() -> None:
         winnow_fingerprints,
         winnow_pairs,
     )
-    from wikidatabots_spark.plans.curation import _v3_gated
+    from wikidatabots_spark.plans.curation import (
+        STANDIN_GATES,
+        TRAINED_GATES,
+        Corpus,
+        gate_stack,
+    )
     from wikidatabots_spark.plans.llmdata import dsir_occurrences, dsir_scores
     from wikidatabots_spark.sources.tables import load_table
     from wikidatabots_spark.functions.scale import pushdown_fence
@@ -80,8 +85,8 @@ def main() -> None:
             ),
         ),
         "lm_score": lambda: with_lm_score(d()),
-        "v3_gated_standin": lambda: _v3_gated(spark, sf_dir),
-        "v3_gated_trained": lambda: _v3_gated(spark, sf_dir, classifier="trained"),
+        "v3_gated_standin": lambda: gate_stack(Corpus(spark, sf_dir), STANDIN_GATES),
+        "v3_gated_trained": lambda: gate_stack(Corpus(spark, sf_dir), TRAINED_GATES),
     }
 
     # warmup

@@ -3,11 +3,10 @@
 from __future__ import annotations
 
 import io
-import warnings
 
 import pytest
 
-from wikidatabots_spark.functions.actions import install_warning_annotations, log_group
+from wikidatabots_spark.functions.actions import log_group
 
 
 def test_log_group_plain(monkeypatch):
@@ -25,16 +24,3 @@ def test_log_group_actions(monkeypatch):
         buf.write("body\n")
     assert buf.getvalue() == "::group::phase\nbody\n::endgroup::\n"
 
-
-def test_warning_annotations(monkeypatch):
-    monkeypatch.setenv("GITHUB_ACTIONS", "true")
-    buf = io.StringIO()
-    old = warnings.showwarning
-    try:
-        install_warning_annotations(file=buf)
-        warnings.warn("rate limited")
-        line = buf.getvalue().strip()
-        assert line.startswith("::warning file=")
-        assert line.endswith("::rate limited")
-    finally:
-        warnings.showwarning = old

@@ -292,19 +292,25 @@ def test_curate_v5_lm_gate_strictly_prunes(spark, sf_dir):
     from wikidatabots_spark import plans
     from wikidatabots_spark.operators.lm import with_lm_score
     from wikidatabots_spark.operators.similarity import semdedup_flags
-    from wikidatabots_spark.plans.curation import _v3_gated
-    from wikidatabots_spark.plans.llmdata import _v5_lmdrop
+    from wikidatabots_spark.plans.curation import (
+        STANDIN_GATES,
+        Corpus,
+        gate_stack,
+        lm_drop,
+    )
     from wikidatabots_spark.sources.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
     semdrop = semdedup_flags(emb, 4, 2, 0.3).where(
         ~F.col("is_kept")
     ).select(F.col("vec_id").alias("doc_id"))
-    gated4_df = _v3_gated(spark, sf_dir).join(semdrop, "doc_id", "left_anti")
+    gated4_df = gate_stack(Corpus(spark, sf_dir), STANDIN_GATES).join(
+        semdrop, "doc_id", "left_anti"
+    )
     gated4 = {r.doc_id for r in gated4_df.collect()}
     d = load_table(spark, sf_dir, "documents")
     lmdrop = {
-        r.doc_id for r in _v5_lmdrop(with_lm_score(d), gated4_df).collect()
+        r.doc_id for r in lm_drop(with_lm_score(d), gated4_df).collect()
     }
     assert lmdrop and lmdrop < gated4  # gate fires, inside the survivors
     gated5 = gated4 - lmdrop

@@ -105,43 +105,3 @@ def test_resize_media_bounded_and_null_safe(spark):
     assert bytes(by_id[2].resized) == b"xy"
     assert by_id[3].resized is None
     assert all(r.resized is None or len(r.resized) <= 4 for r in out)
-
-
-def test_extract_features_arrow_matches_pandas_udf(spark, sf_dir):
-    """The mapInArrow path must produce byte-identical features to the
-    pandas-UDF path — either API can serve the plan."""
-    from wikidatabots_spark.operators.multimodal import (
-        extract_features,
-        extract_features_arrow,
-    )
-    from wikidatabots_spark.sources.tables import load_table
-
-    d = load_table(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("media_id"),
-        F.encode(F.col("text"), "utf-8").alias("data"),
-    )
-    via_pandas = {
-        r["media_id"]: r["features"]
-        for r in extract_features(d).select("media_id", "features").collect()
-    }
-    via_arrow = {
-        r["media_id"]: r["features"]
-        for r in extract_features_arrow(d).collect()
-    }
-    assert via_arrow == via_pandas
-    assert len(via_arrow) > 0
-
-
-def test_extract_features_arrow_plan_is_narrow(spark, sf_dir):
-    from wikidatabots_spark.operators.multimodal import extract_features_arrow
-    from wikidatabots_spark.sources.tables import load_table
-
-    d = load_table(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("media_id"),
-        F.encode(F.col("text"), "utf-8").alias("data"),
-    )
-    plan = (
-        extract_features_arrow(d)._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "Exchange" not in plan
-    assert "ArrowEvalPython" in plan or "MapInArrow" in plan or "PythonMapInArrow" in plan

@@ -1744,7 +1744,7 @@ def test_gate_kernel_matches_builder_chain(spark):
     with_quality → with_lang_guess → with_repetition →
     with_classifier_score chain BIT-for-bit on every non-NULL-text row
     (exact double equality — same integers, same expression trees), and
-    the NULL-text row both paths drop once the _v3_gated gate filters
+    the NULL-text row both paths drop once the curation gate stack filters
     run (the kernel omits it; the chain scores it below every gate)."""
     import random
 

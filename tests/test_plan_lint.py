@@ -14,7 +14,8 @@ Logical-plan tree rule (optimized plan — VERDICT r5 next #2):
 
 - An UNPARTITIONED ``Window`` whose input subtree reaches a large-table
   scan moves the whole table to one task — the single-partition
-  serialization class that killed ``_v5_lmdrop``'s 100 TB story in r5.
+  serialization class that killed the LM polish's (``lm_drop``) 100 TB
+  story in r5.
   Subtrees are walked only until a cardinality fence: an ``Aggregate``
   whose grouping keys are PROVABLY BOUNDED (this repo's ledger
   convention — the two-phase rank's ~1k-bucket ledger, a day, a funnel

@@ -22,22 +22,13 @@ def test_registry_shape():
 def test_registry_priority_window():
     """The r1 driver hash-checked exactly the first 50 registry entries —
     the §2-pinning queries must occupy that window (VERDICT.md r1 #1).
-    Since r11 the window is _CORE (every §2 pin + flagship, permanent)
-    plus ROTATING extension seats (VERDICT r10 next #7): the must_have
-    set below is the permanent contract; the rotating seats only need
-    to be drawn from the documented pool and carry oracles."""
-    from wikidatabots_spark.plans.registry import (
-        _CORE,
-        _EXTENSION_POOL,
-        PRIORITY,
-        ROTATING,
-    )
+    The must_have set below is the permanent contract; every seat must
+    carry an oracle."""
+    from wikidatabots_spark.plans.registry import PRIORITY
 
     q = plans.queries()
     window = list(q)[:50]
     assert window == PRIORITY
-    assert PRIORITY == [*_CORE, *ROTATING]
-    assert set(ROTATING) <= set(_EXTENSION_POOL)
     assert len(set(PRIORITY)) == len(PRIORITY) == 50
     must_have = {
         # §2 micro pins named by the r1 verdict (try_cast/sample live in
@@ -53,8 +44,9 @@ def test_registry_priority_window():
         # opencritic_add/update demoted r8 — opencritic_main's union
         # oracle pins both legs (disjoint 'wd:'/'wds:' prefixes)
         "opencritic_main",
-        # q3/q5/q10 and sql_region_revenue demoted to the rotating pool
-        # in r11 (they cycle back through the window; local gate always)
+        # q3/q5/q10 and sql_region_revenue left the permanent core in
+        # r11 (q5/q10/sql_region_revenue hold the last seats; local gate
+        # always)
         "q1_pricing_summary", "q6_revenue_forecast",
         "sql_q1_identical_text",
         # graded LLM-pipeline components
@@ -70,8 +62,8 @@ def test_registry_priority_window():
         "mm_media_meta", "mm_sample_frames", "mm_extract_features",
         "text_profile", "knn_cosine_topk",
         # promoted composed pipelines / extensions (VERDICT r2 next #2,
-        # r3 next #5); curate_corpus v1/v3 and corpus_mix_epochs rotate
-        # since r11 (v8's oracle strictly supersedes the v-chain)
+        # r3 next #5); curate_corpus v1/v3 and corpus_mix_epochs hold
+        # the last seats (v8's oracle strictly supersedes the v-chain)
         "asof_purchase_signup", "sketch_count_min",
         "dedup_winnow",
         # seated r11: the composed streaming ingest path
@@ -96,48 +88,42 @@ def test_registry_priority_window():
     # real oracles in r3 — no rows-only rows left in the hard signal)
     o = plans.oracle_sql()
     assert [n for n in window if n not in o] == []
-    # every FUTURE rotation slice is also valid: for any round, the
-    # seated pool entries are registered, oracle-carrying, and never
-    # collide with a core seat — bumping _ROTATION_ROUND can't brick
-    # the driver window
-    n_rot = len(ROTATING)
-    for r in range(len(_EXTENSION_POOL)):
-        slice_r = [
-            _EXTENSION_POOL[(r * n_rot + i) % len(_EXTENSION_POOL)]
-            for i in range(n_rot)
-        ]
-        assert all(n in plans.REGISTRY for n in slice_r)
-        assert all(n in o for n in slice_r)
-        assert not set(slice_r) & set(_CORE)
-        assert len(set(slice_r)) == n_rot
 
 
-def test_rotation_round_is_current():
-    """A stale _ROTATION_ROUND silently re-seats the previous rotation
-    slice and extension queries stop accumulating driver-side signal
-    (ADVICE r11). Derive the current round from the newest driver-written
-    CORRECTNESS_r{N}.json at the repo root: the driver commits round
-    N-1's record when round N opens, so during round N the newest file
-    is r(N-1) and _ROTATION_ROUND must equal that + 1. If the driver has
-    already written THIS round's record (end-of-round re-run), equality
-    with N itself is also accepted."""
-    import re
-    from pathlib import Path
+# sha256 of each curation oracle as registered before the curate_corpus
+# versions became configurations of one builder: the oracle programs are
+# pinned byte for byte, so a builder refactor cannot move a result
+_CURATE_ORACLE_SHA256 = {
+    "curate_corpus": "7296fdd9bacb56668c0a3e649af9135cb7bfad606ae19e351f300a275c599c5c",
+    "curate_corpus_v2": "58cbfa5a35ef7de6c75341eeab217fc4aa21118ed0c188dd2955da15497beda8",
+    "curate_corpus_v3": "7dfb9d5eb99da15126a12df58bb38b405f62369df4a405851fa45101e4bb1d0b",
+    "curate_corpus_v4": "eaa0bc1ab7710e91d3eb15e145d342b15742d71562adc228fe345f0d57aedfda",
+    "curate_corpus_v5": "e6a26f8842da10a087bb786bf5747355eda455fbb23822ef56516b2fdddab038",
+    "curate_corpus_v6": "9ba2ba962ce1af061f838fad234ce1347e81d36d8ab856996acab6347199a044",
+    "curate_corpus_v7": "10f22b560e5382a5e858d9a59408c8cd89794913d095fec4d35d7a5a9fe82bdb",
+    "curate_corpus_v8": "463579376c38db8b0c7692441554b69aa78b76546ba56e1907cf4ea44bfa30fe",
+}
 
-    from wikidatabots_spark.plans.registry import _ROTATION_ROUND
+# sha256 of the sorted, newline-joined registered query names (278)
+_REGISTRY_NAMES_SHA256 = "aa6ef63cea81d4fbdf5a9c14013acf5bfcea2dc1a73d93bdc804d5867ac18862"
 
-    root = Path(__file__).resolve().parents[1]
-    rounds = [
-        int(m.group(1))
-        for p in root.glob("CORRECTNESS_r*.json")
-        if (m := re.fullmatch(r"CORRECTNESS_r(\d+)\.json", p.name))
-    ]
-    assert rounds, "driver correctness records missing from repo root"
-    newest = max(rounds)
-    assert _ROTATION_ROUND in (newest + 1, newest), (
-        f"_ROTATION_ROUND={_ROTATION_ROUND} is stale: newest driver record "
-        f"is CORRECTNESS_r{newest:02d}.json — bump plans/registry.py"
-    )
+
+def test_curate_oracles_are_unchanged():
+    import hashlib
+
+    from wikidatabots_spark.plans.registry import PRIORITY
+
+    o = plans.oracle_sql()
+    got = {
+        n: hashlib.sha256(o[n].encode()).hexdigest()
+        for n in _CURATE_ORACLE_SHA256
+    }
+    assert got == _CURATE_ORACLE_SHA256
+    q = plans.queries()
+    assert list(q)[:50] == PRIORITY
+    assert len(q) == 278
+    names = "\n".join(sorted(q)).encode()
+    assert hashlib.sha256(names).hexdigest() == _REGISTRY_NAMES_SHA256
 
 
 def test_entry_smoke(spark, sf_dir):
@@ -187,10 +173,17 @@ def test_curate_v4_semantic_gate_strictly_prunes(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from wikidatabots_spark.operators.similarity import semdedup_flags
-    from wikidatabots_spark.plans.curation import _v3_gated
+    from wikidatabots_spark.plans.curation import (
+        STANDIN_GATES,
+        Corpus,
+        gate_stack,
+    )
     from wikidatabots_spark.sources.tables import load_table
 
-    gated3 = {r.doc_id for r in _v3_gated(spark, sf_dir).collect()}
+    gated3 = {
+        r.doc_id
+        for r in gate_stack(Corpus(spark, sf_dir), STANDIN_GATES).collect()
+    }
     semdrop = {
         r.vec_id
         for r in semdedup_flags(

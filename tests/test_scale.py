@@ -56,10 +56,12 @@ def test_salted_join_matches_plain_join(spark, sf_dir):
 
 def test_zorder_write_clusters_both_dimensions(spark, sf_dir, tmp_path):
     import glob
+    import os
 
     import pyarrow.parquet as pq
 
-    from wikidatabots_spark.functions.scale import write_zordered
+    from wikidatabots_spark.functions.scale import zorder_key
+    from wikidatabots_spark.sinks.compaction import compact_parquet_dir
 
     ev = load_table(spark, sf_dir, "events").select(
         (F.col("user_id") % 256).alias("u"),
@@ -67,7 +69,14 @@ def test_zorder_write_clusters_both_dimensions(spark, sf_dir, tmp_path):
         "value",
     )
     path = str(tmp_path / "ev_z")
-    write_zordered(ev, path, ["u", "e"], bits=8, n_files=8)
+    ev.write.parquet(path)
+    total = sum(os.path.getsize(f) for f in glob.glob(path + "/*.parquet"))
+    # a target of an eighth of the table: the rewrite range-partitions
+    # on the z-order key into 8 files
+    compact_parquet_dir(
+        spark, path, target_bytes=total // 8 + 1,
+        order_by=[zorder_key("u", "e", bits=8)],
+    )
     files = sorted(glob.glob(path + "/*.parquet"))
     assert len(files) >= 4
     # clustering proof: per-file min/max spans on BOTH interleaved

@@ -898,6 +898,44 @@ def test_dedup_graph_writes_deltas_not_snapshots(spark, tmp_path):
     assert got == want
 
 
+def test_dedup_graph_failing_batch_releases_index_pool(
+    spark, tmp_path, monkeypatch
+):
+    """A batch whose label-delta write raises must not leak the
+    background band-index writer: when apply() returns with the error,
+    the index write has been joined and no executor worker the batch
+    started is still alive."""
+    import os
+    import threading
+
+    from wikidatabots_spark.sinks import compaction
+    from wikidatabots_spark.streaming.docs_stream import dedup_graph_maintenance
+
+    index_path = str(tmp_path / "idx")
+    labels_path = str(tmp_path / "lbl")
+    real = compaction.ensure_linked_store
+
+    def failing(path):
+        if path == labels_path:
+            raise RuntimeError("label store unavailable")
+        real(path)
+
+    monkeypatch.setattr(compaction, "ensure_linked_store", failing)
+    apply = dedup_graph_maintenance(index_path, labels_path)
+    before = set(threading.enumerate())
+    with pytest.raises(RuntimeError, match="label store unavailable"):
+        apply(_docs(spark, (1, "A"), (2, "A"), (3, "B")), 0)
+    leaked = [
+        t.name
+        for t in threading.enumerate()
+        if t not in before
+        and t.name.startswith("ThreadPoolExecutor")
+        and t.is_alive()
+    ]
+    assert leaked == []
+    assert any(n.startswith("band_pfx=") for n in os.listdir(index_path))
+
+
 def test_dedup_graph_index_probe_partition_filters(spark, tmp_path):
     """The probe-side index read carries PARTITION filters (VERDICT r9
     next #3): both the batch-id replay fence and the band-prefix IN

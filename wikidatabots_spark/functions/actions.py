@@ -1,10 +1,8 @@
 """CI log formatting (reference ``actions.py``, 47 LoC).
 
-The reference wraps pipeline phases in GitHub-Actions log groups and
-routes Python warnings to ``::warning::`` annotations (actions.py:14-44)
-so CI surfaces engine warnings (rate-limit hits, row-cap samples) as
-first-class annotations. Same behavior here, keyed off the standard
-``GITHUB_ACTIONS`` env var; outside CI both degrade to plain stderr.
+The reference wraps pipeline phases in GitHub-Actions log groups
+(actions.py:14-26). Same behavior here, keyed off the standard
+``GITHUB_ACTIONS`` env var; outside CI it degrades to plain stderr.
 """
 
 from __future__ import annotations
@@ -12,7 +10,6 @@ from __future__ import annotations
 import contextlib
 import os
 import sys
-import warnings
 from collections.abc import Iterator
 
 
@@ -34,24 +31,3 @@ def log_group(title: str, file=None) -> Iterator[None]:
         if _in_actions():
             print("::endgroup::", file=out, flush=True)
 
-
-def install_warning_annotations(file=None) -> None:
-    """Route ``warnings.warn`` to ``::warning::`` annotations in CI
-    (actions.py:29-44); plain formatting elsewhere."""
-    out = file or sys.stderr
-
-    def showwarning(message, category, filename, lineno, *_args, **_kw):
-        if _in_actions():
-            print(
-                f"::warning file={filename},line={lineno}::{message}",
-                file=out,
-                flush=True,
-            )
-        else:
-            print(
-                f"{filename}:{lineno}: {category.__name__}: {message}",
-                file=out,
-                flush=True,
-            )
-
-    warnings.showwarning = showwarning

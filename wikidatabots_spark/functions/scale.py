@@ -156,28 +156,6 @@ def zorder_key(*cols: Column | str, bits: int = 16) -> Column:
     return key
 
 
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    bits: int = 16,
-    n_files: int = 8,
-) -> None:
-    """Write ``df`` clustered by the Z-order of ``cols``: range-partition
-    on the key (co-locating near keys in the same file), sort within
-    partitions (tight row-group stats), drop the key. Readers filtering
-    on any clustered column then prune at both the file-stats and
-    row-group level."""
-    keyed = df.withColumn("__z", zorder_key(*cols, bits=bits))
-    (
-        keyed.repartitionByRange(n_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
 def bucketed_global_rank(
     df: DataFrame,
     bucket: Column,

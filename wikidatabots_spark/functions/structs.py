@@ -65,34 +65,6 @@ def tmdb_find_result_type(media_type: str) -> StructType:
     )
 
 
-# wikidata.py:11-23 — MediaWiki extracts API response for one pinned page id
-def mediawiki_extract_type(page_id: str = "103442925") -> StructType:
-    return StructType(
-        [
-            StructField(
-                "query",
-                StructType(
-                    [
-                        StructField(
-                            "pages",
-                            StructType(
-                                [
-                                    StructField(
-                                        page_id,
-                                        StructType(
-                                            [StructField("extract", StringType())]
-                                        ),
-                                    )
-                                ]
-                            ),
-                        )
-                    ]
-                ),
-            )
-        ]
-    )
-
-
 def prepare_request(url: Column | str, headers: dict[str, str] | None = None) -> Column:
     """Build an http_request struct column (polars_requests.py:197-215).
 

@@ -224,44 +224,3 @@ def perceptual_hash(
     )
     return df.withColumn(out_col, phash).drop("__bs", "__mean")
 
-
-def extract_features_arrow(
-    df: DataFrame, id_col: str = "media_id", data_col: str = "data"
-) -> DataFrame:
-    """``mapInArrow`` variant of :func:`extract_features`: consumes raw
-    ``pyarrow.RecordBatch``es — no Arrow→pandas→Arrow round trip, the
-    lowest-overhead Python execution path Spark offers (the right API
-    when the per-batch work is a tight loop over bytes and the pandas
-    Series layer would only add boxing). Emits ``(id, features)`` rows
-    computing the SAME deterministic features as the pandas-UDF
-    variant — parity is test-pinned, so either API can serve the plan.
-
-    Scale shape: identical to the pandas path — a narrow map over the
-    blob column, blobs never shuffle; output drops the blob, so only
-    ids + fixed-dim vectors flow downstream.
-    """
-    import pyarrow as pa
-
-    out_schema = StructType(
-        [
-            StructField("media_id", LongType()),
-            StructField("features", ArrayType(FloatType())),
-        ]
-    )
-
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids = batch.column(0)
-            blobs = batch.column(1)
-            feats = [
-                None if not blobs[i].is_valid else _fake_features(blobs[i].as_py())
-                for i in range(batch.num_rows)
-            ]
-            yield pa.RecordBatch.from_arrays(
-                [ids, pa.array(feats, type=pa.list_(pa.float32()))],
-                names=["media_id", "features"],
-            )
-
-    return df.select(
-        F.col(id_col).cast("long").alias(id_col), F.col(data_col)
-    ).mapInArrow(gen, out_schema)

@@ -284,8 +284,8 @@ def gate_feature_counts(
     Rows with NULL ``text_col`` are OMITTED. The builder chain instead
     scores such a row ``quality 0.195 / lang 'und' / cls_score NULL``
     (``size(NULL array)`` is -1 under the session's legacy setting), so
-    every gate in ``_v3_gated`` filters it out and its ``label`` is
-    false-with-no-occurrence-rows — both paths contribute nothing, so
+    every gate in ``plans.curation.gate_stack`` filters it out and its
+    ``label`` is false-with-no-occurrence-rows — both paths contribute nothing, so
     dropping the row is output-equivalent for the gate consumers (not
     for arbitrary outer-join callers; this is a gate-stack kernel).
     Token-free texts keep their row with zero counters, matching the

@@ -18,7 +18,6 @@
   ``corpus_token_budget_select`` (greedy best-first token budget with
   a partition-parallel two-phase prefix sum),
   ``corpus_quality_sample`` (deterministic quality-weighted Bernoulli)
-- ``curate_corpus_v5`` — the flagship composition with the LM polish
 - ``knn_ivf_exact`` — deterministic IVF, hash-checked end-to-end
 - breadth: ``win_distribution``, ``agg_corr_covar``,
   ``dedup_pair_edit_distance``, ``graph_triangles``
@@ -1389,197 +1388,6 @@ def ev_hourly_anomaly_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.abs(z) > 2.0).alias("is_anomaly"),
         )
     )
-
-
-# ---------------------------------------------------------------------------
-# curate_corpus_v5 — v4 plus the per-source LM-score gate
-# ---------------------------------------------------------------------------
-
-
-def _curate_v5_oracle() -> str:
-    from wikidatabots_spark.plans.curation import (
-        _MIX_BUCKET_SQL,
-        _SPLIT_BUCKET_SQL,
-        _SPLIT_CUT,
-    )
-    from wikidatabots_spark.plans.extensions import (
-        _CLS_ORACLE,
-        _LANGID_ORACLE,
-        _QUALITY_ORACLE,
-        _REPETITION_ORACLE,
-        _WINNOW_PAIRS_ORACLE,
-        _semdedup_oracle,
-    )
-
-    return f"""
-WITH RECURSIVE
-qual AS ({_QUALITY_ORACLE}),
-lng AS ({_LANGID_ORACLE}),
-rep AS ({_REPETITION_ORACLE}),
-cls AS ({_CLS_ORACLE}),
-lm AS ({_LM_ORACLE}),
-pairs AS ({_WINNOW_PAIRS_ORACLE}),
-edges AS (
-    SELECT id_a AS u, id_b AS v FROM pairs
-    UNION ALL SELECT id_b, id_a FROM pairs
-),
-gnodes AS (SELECT DISTINCT u AS node FROM edges),
-reach(node, r) AS (
-    SELECT node, node FROM gnodes
-    UNION
-    SELECT e.u, reach.r FROM reach JOIN edges e ON e.v = reach.node
-),
-comp AS (SELECT node, MIN(r) AS component FROM reach GROUP BY node),
-dup_nodes AS (SELECT node FROM comp WHERE node != component),
-exact_canon AS (
-    SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY md5(text)
-),
-survivors AS (
-    SELECT doc_id FROM exact_canon
-    WHERE doc_id NOT IN (SELECT node FROM dup_nodes)
-),
-sem AS ({_semdedup_oracle(0.3)}),
-semdrop AS (SELECT vec_id AS doc_id FROM sem WHERE NOT is_kept),
-gated4 AS (
-    SELECT s.doc_id, d.source
-    FROM survivors s
-    JOIN qual ON qual.doc_id = s.doc_id
-    JOIN lng ON lng.doc_id = s.doc_id
-    JOIN rep ON rep.doc_id = s.doc_id
-    JOIN cls ON cls.doc_id = s.doc_id
-    JOIN documents d ON d.doc_id = s.doc_id
-    WHERE qual.quality >= 0.5 AND lng.lang_guess = 'en'
-      AND rep.dup_2gram_frac <= 0.05 AND rep.type_token_ratio >= 0.35
-      AND cls.keep
-      AND s.doc_id NOT IN (SELECT doc_id FROM semdrop)
-),
-lmranked AS (
-    SELECT g.doc_id,
-           row_number() OVER (ORDER BY l.lm_score, l.doc_id) AS lrn,
-           COUNT(*) OVER () AS n_gated
-    FROM gated4 g JOIN lm l ON l.doc_id = g.doc_id
-),
-lmdrop AS (SELECT doc_id FROM lmranked WHERE lrn <= n_gated // 4),
-gated AS (
-    SELECT * FROM gated4
-    WHERE doc_id NOT IN (SELECT doc_id FROM lmdrop)
-),
-counts AS (
-    SELECT source, CAST(COUNT(*) AS BIGINT) AS cnt,
-           CAST(CASE WHEN source = 'src0' THEN 1
-                     WHEN source = 'src1' THEN 9
-                     ELSE 3 END AS BIGINT) AS wt
-    FROM gated GROUP BY source
-),
-tot AS (
-    SELECT CAST(SUM(cnt) AS BIGINT) AS t, CAST(SUM(wt) AS BIGINT) AS w
-    FROM counts
-),
-rates AS (
-    SELECT source, (wt * t * 65536) // (w * cnt) AS k FROM counts, tot
-),
-mixdocs AS (
-    SELECT g.doc_id, g.source, {_MIX_BUCKET_SQL.replace("doc_id", "g.doc_id")} AS b
-    FROM gated g
-),
-expanded AS (
-    SELECT m.doc_id, m.source,
-           r.k // 65536 + CASE WHEN m.b < r.k % 65536 THEN 1 ELSE 0 END AS n
-    FROM mixdocs m JOIN rates r USING (source)
-),
-final AS (
-    SELECT doc_id, source,
-           CAST(UNNEST(generate_series(1, n)) AS BIGINT) AS epoch
-    FROM expanded WHERE n >= 1
-),
-bucket AS (
-    SELECT doc_id, {_SPLIT_BUCKET_SQL} AS b FROM documents
-)
-SELECT f.doc_id, f.source, f.epoch,
-       CASE WHEN bucket.b < {_SPLIT_CUT} THEN 'train' ELSE 'holdout' END AS split
-FROM final f JOIN bucket ON bucket.doc_id = f.doc_id
-"""
-
-
-def _v5_lmdrop(lm_scored: DataFrame, gated4: DataFrame) -> DataFrame:
-    """The v5 LM gate: rank the GATED survivor set by LM score and drop
-    its bottom quarter (exact rank, n div 4). Relative-to-survivors —
-    an absolute threshold or a whole-corpus percentile is structurally
-    vacuous on a heavily-gated set (measured: the corpus-level
-    bottom-10% band had zero overlap with the 5-doc survivor set at
-    sf0.001) — and adaptive, so the gate provably fires at any scale
-    with ≥4 survivors.
-
-    The rank rides :func:`bucketed_global_rank` (VERDICT r5 next #1):
-    production gate stacks keep tens of percent of the corpus, so the
-    survivor set is NOT safely one-partition-sized — the two-phase form
-    keeps every fact-table window partitioned by the lm_score bucket
-    (~1k ledger rows over the [0, 1e6] ppm range) and the count is a
-    broadcast 1-row aggregate instead of an unbounded global window.
-    NULL lm_scores (< 2-word docs) bucket below the real range,
-    matching Spark's ASC NULLS FIRST placement."""
-    from wikidatabots_spark.functions.scale import (
-        bucketed_global_rank,
-        pushdown_fence,
-    )
-
-    # fence: the scored survivor frame feeds the ledger aggregate, the
-    # fact-side rank join, AND the count — unfenced, the bigram-LM
-    # scoring pipeline would execute three times
-    joined = pushdown_fence(
-        gated4.select("doc_id").join(lm_scored, "doc_id")
-    )
-    n = joined.agg(F.count(F.lit(1)).cast("long").alias("n_gated"))
-    ranked = bucketed_global_rank(
-        joined,
-        bucket=F.floor(
-            F.coalesce(F.col("lm_score"), F.lit(-1024.0)) / F.lit(1024.0)
-        ),
-        order=[F.col("lm_score").asc(), F.col("doc_id").asc()],
-        rn="lrn",
-    )
-    return (
-        ranked.crossJoin(F.broadcast(n))
-        .where(F.col("lrn") <= F.expr("n_gated div 4"))
-        .select("doc_id")
-    )
-
-
-@register("curate_corpus_v5", oracle=_curate_v5_oracle())
-def curate_corpus_v5_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """v4 plus the LM-QUALITY polish: after every other gate, the
-    surviving set's bottom quarter by corpus-trained bigram LM score is
-    dropped (exact rank over survivors — see ``_v5_lmdrop`` for why
-    relative-to-survivors is the non-vacuous form). The full modern
-    pipeline: exact dedup → winnow/CC near-dup components → quality +
-    language + repetition + classifier gates → cross-table SemDeDup
-    gate → LM polish → integer-exact mixture with epochs →
-    content-hash split. The oracle embeds the whole LM computation —
-    model training included — inside the recursive-CTE curation
-    program."""
-    from wikidatabots_spark.functions.scale import pushdown_fence
-    from wikidatabots_spark.operators.lm import with_lm_score
-    from wikidatabots_spark.operators.similarity import semdedup_flags
-    from wikidatabots_spark.plans.curation import _mix_and_split, _v3_gated
-
-    d = load_table(spark, sf_dir, "documents")
-    emb = load_table(spark, sf_dir, "embeddings")
-    semdrop = (
-        semdedup_flags(emb, k=4, rounds=2, threshold=0.3)
-        .where(~F.col("is_kept"))
-        .select(F.col("vec_id").alias("doc_id"))
-    )
-    # fence the survivor set: BOTH the LM rank branch and the final
-    # anti-join read it — unfenced, the whole v3-gate + semdedup subtree
-    # executed twice (measured ~+4 s at sf0.1)
-    gated4 = pushdown_fence(
-        _v3_gated(spark, sf_dir).join(semdrop, "doc_id", "left_anti")
-    )
-    # score_ids=gated4 (r14): only survivor scores are consumed — the
-    # scoring aggregate runs over the survivor slice; the model still
-    # trains on the full corpus (same rows out, oracle-pinned)
-    lmdrop = _v5_lmdrop(with_lm_score(d, score_ids=gated4), gated4)
-    return _mix_and_split(gated4.join(lmdrop, "doc_id", "left_anti"))
 
 
 # ---------------------------------------------------------------------------

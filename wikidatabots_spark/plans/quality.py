@@ -729,16 +729,10 @@ def corpus_split_assign_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (corpus_quality_sample) with two cutpoints. Narrow map, zero
     shuffles.
     """
+    from wikidatabots_spark.plans.curation import split_bucket
+
     d = load_table(spark, sf_dir, "documents")
-    bkt = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("split:"), F.col("doc_id").cast("string"))),
-            1,
-            4,
-        ),
-        16,
-        10,
-    ).cast("long")
+    bkt = split_bucket()
     return d.select(
         "doc_id",
         "source",
@@ -1379,17 +1373,10 @@ def corpus_split_decontaminate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         winnow_fingerprints,
         winnow_pairs,
     )
+    from wikidatabots_spark.plans.curation import split_bucket
 
     d = load_table(spark, sf_dir, "documents")
-    bkt = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("split:"), F.col("doc_id").cast("string"))),
-            1,
-            4,
-        ),
-        16,
-        10,
-    ).cast("long")
+    bkt = split_bucket()
     splits = d.select(
         "doc_id",
         F.when(bkt < SPLIT_TRAIN_END, F.lit("train"))
@@ -3251,298 +3238,6 @@ def ingest_pipeline_stream_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("imp_ppm").cast("long").alias("val"),
     )
     return _decoupled(flags.unionByName(comps).unionByName(scores))
-
-
-# ---------------------------------------------------------------------------
-# curate_corpus_v6 — the flagship pipeline with DATA-DERIVED mixture weights
-# ---------------------------------------------------------------------------
-
-_V5_WT_SQL = """CAST(CASE WHEN source = 'src0' THEN 1
-                     WHEN source = 'src1' THEN 9
-                     ELSE 3 END AS BIGINT) AS wt"""
-_V6_WT_SQL = "CAST(floor(sqrt(CAST(COUNT(*) AS DOUBLE))) AS BIGINT) AS wt"
-
-
-def _curate_v6_oracle() -> str:
-    from wikidatabots_spark.plans.llmdata import _curate_v5_oracle
-
-    v5 = _curate_v5_oracle()
-    assert v5.count(_V5_WT_SQL) == 1, "v5 oracle weight CTE moved"
-    return v5.replace(_V5_WT_SQL, _V6_WT_SQL)
-
-
-@register("curate_corpus_v6", oracle=_curate_v6_oracle())
-def curate_corpus_v6_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """v5 with the hand-set mixture weights replaced by DATA-DERIVED
-    temperature weights (shares proportional to sqrt of each source's
-    surviving count — ``corpus_mix_temperature``'s rule applied inside
-    the flagship): the full modern pipeline — exact dedup → winnow/CC
-    components → quality/language/repetition/classifier gates →
-    cross-table SemDeDup gate → LM survivor polish → sqrt-frequency
-    mixture with epochs → content-hash split — now needs NO curated
-    weight list to maintain as sources churn. The oracle is the entire
-    v5 recursive-CTE program with only the weight expression swapped
-    (asserted single-site), so the diff between pipelines is exactly
-    the mixture policy.
-
-    Scale: identical to v5 (the gate stack and fences are shared code);
-    the temperature weights add only a |sources|-row aggregate to the
-    already-|sources|-row rate table.
-    """
-    from wikidatabots_spark.functions.scale import pushdown_fence
-    from wikidatabots_spark.operators.lm import with_lm_score
-    from wikidatabots_spark.operators.mixture import mix_temperature
-    from wikidatabots_spark.operators.similarity import semdedup_flags
-    from wikidatabots_spark.plans.curation import _SPLIT_CUT, _v3_gated
-    from wikidatabots_spark.plans.llmdata import _v5_lmdrop
-
-    d = load_table(spark, sf_dir, "documents")
-    emb = load_table(spark, sf_dir, "embeddings")
-    semdrop = (
-        semdedup_flags(emb, k=4, rounds=2, threshold=0.3)
-        .where(~F.col("is_kept"))
-        .select(F.col("vec_id").alias("doc_id"))
-    )
-    gated4 = pushdown_fence(
-        _v3_gated(spark, sf_dir).join(semdrop, "doc_id", "left_anti")
-    )
-    lmdrop = _v5_lmdrop(with_lm_score(d, score_ids=gated4), gated4)
-    final_gated = pushdown_fence(gated4.join(lmdrop, "doc_id", "left_anti"))
-    mixed = mix_temperature(final_gated, key="doc_id", strata="source")
-    split_bucket = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("split:"), F.col("doc_id").cast("string"))),
-            1,
-            4,
-        ),
-        16,
-        10,
-    ).cast("long")
-    return mixed.select(
-        "doc_id",
-        "source",
-        "epoch",
-        F.when(split_bucket < _SPLIT_CUT, F.lit("train"))
-        .otherwise(F.lit("holdout"))
-        .alias("split"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# curate_corpus_v7 — the flagship with the SELF-TRAINED classifier gate
-# ---------------------------------------------------------------------------
-
-
-def _curate_v7_oracle() -> str:
-    from wikidatabots_spark.plans.extensions import (
-        _CLS_ORACLE,
-        _CLS_TRAINED_ORACLE,
-    )
-
-    v6 = _curate_v6_oracle()
-    old = f"cls AS ({_CLS_ORACLE})"
-    assert v6.count(old) == 1, "v6 oracle classifier CTE moved"
-    return v6.replace(old, f"cls AS ({_CLS_TRAINED_ORACLE})")
-
-
-@register("curate_corpus_v7", oracle=_curate_v7_oracle())
-def curate_corpus_v7_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """v6 with the stand-in classifier gate replaced by the SELF-TRAINED
-    hashed-NB model (the v5→v6 single-site-swap pattern applied to the
-    classifier): exact dedup → winnow/CC → quality/language/repetition
-    gates → TRAINED-classifier keep (train_hashed_nb on the
-    quality≥0.5 label, broadcast model, keep = score≥0) → cross-table
-    SemDeDup → LM survivor polish → data-derived temperature mixture →
-    content-hash split. The oracle is the entire v6 recursive-CTE
-    program with only the classifier CTE swapped for the trained-NB
-    derivation (asserted single-site), so the learned weights inside
-    the flagship are themselves hash-verified end-to-end — the last
-    stand-in in the curation path now carries real learned signal.
-
-    Scale: adds one (id, bucket, cnt) occurrence pass over the corpus
-    (fenced, shared by train and score) and a ≤1024-row broadcast to
-    v6's audited shape; everything else is shared code.
-    """
-    from wikidatabots_spark.functions.scale import pushdown_fence
-    from wikidatabots_spark.operators.lm import with_lm_score
-    from wikidatabots_spark.operators.mixture import mix_temperature
-    from wikidatabots_spark.operators.similarity import semdedup_flags
-    from wikidatabots_spark.plans.curation import _SPLIT_CUT, _v3_gated
-    from wikidatabots_spark.plans.llmdata import _v5_lmdrop
-
-    d = load_table(spark, sf_dir, "documents")
-    emb = load_table(spark, sf_dir, "embeddings")
-    semdrop = (
-        semdedup_flags(emb, k=4, rounds=2, threshold=0.3)
-        .where(~F.col("is_kept"))
-        .select(F.col("vec_id").alias("doc_id"))
-    )
-    gated4 = pushdown_fence(
-        _v3_gated(spark, sf_dir, classifier="trained").join(
-            semdrop, "doc_id", "left_anti"
-        )
-    )
-    lmdrop = _v5_lmdrop(with_lm_score(d, score_ids=gated4), gated4)
-    final_gated = pushdown_fence(gated4.join(lmdrop, "doc_id", "left_anti"))
-    mixed = mix_temperature(final_gated, key="doc_id", strata="source")
-    split_bucket = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("split:"), F.col("doc_id").cast("string"))),
-            1,
-            4,
-        ),
-        16,
-        10,
-    ).cast("long")
-    return mixed.select(
-        "doc_id",
-        "source",
-        "epoch",
-        F.when(split_bucket < _SPLIT_CUT, F.lit("train"))
-        .otherwise(F.lit("holdout"))
-        .alias("split"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# curate_corpus_v8 — the flagship with the DSIR domain-affinity gate
-# ---------------------------------------------------------------------------
-
-
-def _curate_v8_oracle() -> str:
-    from wikidatabots_spark.plans.llmdata import _DSIR_SC_CTES
-
-    v7 = _curate_v7_oracle()
-    # splice 1: the DSIR scoring CTEs (dsir_-prefixed, collision-free)
-    # ahead of the semdedup CTE
-    anchor = "sem AS ("
-    assert v7.count(anchor) == 1, "v7 oracle semdedup CTE moved"
-    v8 = v7.replace(
-        anchor,
-        f"""{_DSIR_SC_CTES},
-dsir_ntok AS (
-    SELECT doc_id, CAST(SUM(cnt) AS BIGINT) AS n_tok
-    FROM dsir_occ WHERE source <> 'src0' GROUP BY doc_id
-),
-dsir_stats AS (
-    SELECT CAST(SUM(s.imp_ppm) AS BIGINT) AS s_imp,
-           CAST(SUM(n.n_tok) AS BIGINT) AS s_tok
-    FROM dsir_sc s JOIN dsir_ntok n USING (doc_id)
-),
-dsir_drop AS (
-    SELECT s.doc_id FROM dsir_sc s JOIN dsir_ntok n USING (doc_id), dsir_stats
-    WHERE s.imp_ppm * dsir_stats.s_tok < n.n_tok * dsir_stats.s_imp
-),
-{anchor}""",
-    )
-    # splice 2: the gate itself, right after the semdedup anti-membership
-    gate = "AND s.doc_id NOT IN (SELECT doc_id FROM semdrop)"
-    assert v8.count(gate) == 1, "v7 oracle semdrop gate moved"
-    return v8.replace(
-        gate,
-        gate + "\n      AND s.doc_id NOT IN (SELECT doc_id FROM dsir_drop)",
-    )
-
-
-@register("curate_corpus_v8", oracle=_curate_v8_oracle())
-def curate_corpus_v8_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """v7 with a DSIR DOMAIN-AFFINITY gate added to the stack (the
-    single-site-extension pattern the v5→v6→v7 chain established):
-    exact dedup → winnow/CC → quality/language/repetition gates →
-    trained-classifier keep → cross-table SemDeDup → **drop raw-pool
-    docs whose PER-TOKEN DSIR affinity is below the raw pool's overall
-    per-token rate** (target-source docs pass untouched; the raw
-    importance SUM is length-correlated — with it, 38 of v7's 40
-    sf0.01 survivors died because quality gates favor long docs — so
-    the gate compares imp_i·Σn ≥ n_i·Σimp, the integer cross-multiply
-    of per-token averages, no division anywhere) → LM
-    survivor polish → temperature mixture → content-hash split. This is
-    DSIR doing its actual job — steering a pretraining corpus toward a
-    target domain inside the full curation stack — rather than standing
-    alone. The oracle is the entire v7 recursive-CTE program with the
-    DSIR CTEs and one anti-membership spliced in (both asserted
-    single-site), so the whole composition stays hash-verified.
-
-    Scale: ONE hashed-occurrence pass over the corpus feeds BOTH the
-    trained-classifier gate and this DSIR gate — the (doc_id, source,
-    bucket, cnt) table is fenced once and the NB path projects source
-    away (same ``_token_bucket`` feature space, so the shared table is
-    row-identical to each gate's private one; VERDICT r9 next #5 —
-    previously they priced separately). On top of that: a ≤1024-row
-    broadcast model, a 1-row broadcast stats aggregate, and one
-    anti-join — nothing unbounded.
-    """
-    from wikidatabots_spark.functions.scale import pushdown_fence
-    from wikidatabots_spark.operators.lm import with_lm_score
-    from wikidatabots_spark.operators.mixture import mix_temperature
-    from wikidatabots_spark.operators.similarity import semdedup_flags
-    from wikidatabots_spark.plans.curation import _SPLIT_CUT, _v3_gated
-    from wikidatabots_spark.plans.llmdata import (
-        _v5_lmdrop,
-        dsir_occurrences,
-        dsir_scores,
-    )
-
-    d = load_table(spark, sf_dir, "documents")
-    emb = load_table(spark, sf_dir, "embeddings")
-    semdrop = (
-        semdedup_flags(emb, k=4, rounds=2, threshold=0.3)
-        .where(~F.col("is_kept"))
-        .select(F.col("vec_id").alias("doc_id"))
-    )
-    occ = pushdown_fence(
-        dsir_occurrences(d.select("doc_id", "source", "text"))
-    )
-    # the cross-multiply stays inside BIGINT at the tested SFs (|imp|
-    # ≲ 5e7, pool tokens ≲ 1.5e6 → products ≲ 1e14); at 10^11-doc pools
-    # Σn/Σimp outgrow the product headroom — there the gate compares
-    # floor-div ppm per-token averages instead (one div per side, still
-    # engine-exact), a data change not a shape change
-    sc = pushdown_fence(
-        dsir_scores(d.select("doc_id", "source", "text"), occ=occ)
-    )
-    stats = sc.agg(
-        F.sum("imp_ppm").cast("long").alias("s_imp"),
-        F.sum("n_tok").cast("long").alias("s_tok"),
-    )
-    dsirdrop = (
-        sc.crossJoin(F.broadcast(stats))
-        .where(
-            F.col("imp_ppm") * F.col("s_tok")
-            < F.col("n_tok") * F.col("s_imp")
-        )
-        .select("doc_id")
-    )
-    gated4 = pushdown_fence(
-        _v3_gated(
-            spark,
-            sf_dir,
-            classifier="trained",
-            occ=occ.select("doc_id", "bucket", "cnt"),
-        )
-        .join(semdrop, "doc_id", "left_anti")
-        .join(dsirdrop, "doc_id", "left_anti")
-    )
-    lmdrop = _v5_lmdrop(with_lm_score(d, score_ids=gated4), gated4)
-    final_gated = pushdown_fence(gated4.join(lmdrop, "doc_id", "left_anti"))
-    mixed = mix_temperature(final_gated, key="doc_id", strata="source")
-    split_bucket = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("split:"), F.col("doc_id").cast("string"))),
-            1,
-            4,
-        ),
-        16,
-        10,
-    ).cast("long")
-    return mixed.select(
-        "doc_id",
-        "source",
-        "epoch",
-        F.when(split_bucket < _SPLIT_CUT, F.lit("train"))
-        .otherwise(F.lit("holdout"))
-        .alias("split"),
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -38,17 +38,7 @@ REGISTRY: dict[str, Entry] = {}
 # rollup/TPC-H variants) follow. The extensions stay fully checked by the
 # local gate (scripts/check_oracle.py runs ALL entries) — only the driver's
 # capped window is ordered here.
-#
-# Since r11 the window is CORE + ROTATING (VERDICT r10 next #7): the ~44
-# _CORE seats below hold every §2 pin and graded flagship permanently;
-# the remaining seats cycle deterministically through _EXTENSION_POOL so
-# extension queries accumulate driver-side (not just local-gate) signal
-# across rounds. Bump _ROTATION_ROUND once per round; the seated slice
-# advances by _N_ROTATING each bump and wraps. Demoted-from-core
-# veterans (TPC-H q3/q5/q10, sql_region_revenue, curate_corpus v1/v3,
-# corpus_mix_epochs) live in the pool and come back around; their hash
-# checks still run every round in the local gate.
-_CORE: list[str] = [
+PRIORITY: list[str] = [
     # §2 micro-queries (one per operator family; the O3 sampling pair,
     # the T2/T3 string pair, the F6/F9/N1 scalar trio, the A1/A2 unique
     # pair, the U2/R1 explode pair, the J4/J5 join pair, and the
@@ -165,80 +155,14 @@ _CORE: list[str] = [
     # model + scoring over the same staged micro-batches — hash-checked
     # against the batch composition.
     "ingest_pipeline_stream",
-]
-
-# Extension seats (VERDICT r10 next #7): the window's non-core seats
-# cycle through this pool deterministically. Round r seats the
-# _N_ROTATING entries starting at ((r - 11) * _N_ROTATING) mod len(pool)
-# — r11 starts at the head, every later round advances by one slice and
-# wraps, so every pool entry gets driver-side signal once per
-# ceil(len(pool)/_N_ROTATING) rounds. Pool order: previously-unseated
-# entries first (they have never had a driver row), then the veterans
-# demoted from core in r11.
-_EXTENSION_POOL: list[str] = [
-    # never seated before r11
-    "knn_lsh_topk",
-    "knn_ivf_topk",
-    "dedup_minhash_ml",
-    "text_contamination",
-    "sample_weighted_k",
-    "ev_rollup_incremental",
-    "ev_sessionize",
-    "sketch_hll",
-    "corpus_dsir_select",
-    "text_gopher_rules",
-    "graph_component_sizes",
-    "ev_funnel",
-    "win_topk_per_group",
-    "agg_rollup",
-    "dedup_substring",
-    "text_bm25_topk",
-    "emb_kmeans",
-    # veterans demoted from core in r11 (green since r3-r5)
-    "q3_shipping_priority",
+    # extension veterans (green since r3-r5) holding the last six seats
     "q5_local_supplier_volume",
     "q10_returned_items",
     "sql_region_revenue",
     "curate_corpus",
     "curate_corpus_v3",
     "corpus_mix_epochs",
-    # r12 additions (appended so earlier rounds' slices are unchanged)
-    "dedup_skew_hotbucket",
-    # r13 additions
-    "ev_pivot_user_activity",
-    "op_unpivot_measures",
-    "op_map_ops",
-    # r14 additions
-    "ev_bitmap_distinct",
-    "agg_multi_distinct",
-    "op_higher_order_arrays",
-    "join_bucketed_colocated",
-    "knn_ivf_pq",
-    # r14 wave 3
-    "join_incremental_delta",
-    "op_snapshot_diff",
-    "stats_regression",
-    # r14 wave 4
-    "sql_not_in_nulls",
-    "win_forward_fill",
-    "join_salted_hotkey",
 ]
-
-# Bumped once per round. Guarded by tests/test_plans.py::test_rotation_round_is_current,
-# which derives the current round from the newest driver-written
-# CORRECTNESS_r{N}.json at the repo root (the driver commits round N-1's
-# record when round N opens), so a forgotten bump fails pytest loudly
-# instead of silently re-seating the previous rotation slice (ADVICE r11).
-_ROTATION_ROUND = 14
-_N_ROTATING = 6
-
-_offset = ((_ROTATION_ROUND - 11) * _N_ROTATING) % len(_EXTENSION_POOL)
-ROTATING: list[str] = [
-    _EXTENSION_POOL[(_offset + i) % len(_EXTENSION_POOL)]
-    for i in range(_N_ROTATING)
-]
-
-PRIORITY: list[str] = [*_CORE, *ROTATING]
 
 
 def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:

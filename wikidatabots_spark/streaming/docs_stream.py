@@ -19,6 +19,7 @@ from __future__ import annotations
 import hashlib
 import os
 import tempfile
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -733,10 +734,19 @@ def dedup_graph_maintenance(
         )
 
     def apply(batch: DataFrame, batch_id: int) -> None:
-        from concurrent.futures import ThreadPoolExecutor
+        # the band-index append runs on this pool (see _apply_batch);
+        # shut it down on every exit, a failing batch included, so a
+        # write still in flight is joined and the worker thread released
+        idx_pool = ThreadPoolExecutor(max_workers=1)
+        try:
+            _apply_batch(batch, int(batch_id), idx_pool)
+        finally:
+            idx_pool.shutdown(wait=True)
 
+    def _apply_batch(
+        batch: DataFrame, batch_id: int, idx_pool: ThreadPoolExecutor
+    ) -> None:
         spark = batch.sparkSession
-        batch_id = int(batch_id)
         _pmark(f"graph b{batch_id}: enter")
         if op_col in batch.columns:
             deletes = pushdown_fence(
@@ -761,8 +771,6 @@ def dedup_graph_maintenance(
         # built (file listing done), so the concurrent append — which
         # this batch's probe excludes anyway via __batch_id < batch_id —
         # can never confuse the probe's listing.
-        _idx_pool = ThreadPoolExecutor(max_workers=1)
-
         def _index_write() -> None:
             _write_fenced(
                 bands_new.withColumn("band_pfx", _band_pfx()).withColumn(
@@ -779,7 +787,7 @@ def dedup_graph_maintenance(
                 "node", "component"
             )
             _pmark(f"graph b{batch_id}: init CC")
-            _idx_fut = _idx_pool.submit(_index_write)
+            _idx_fut = idx_pool.submit(_index_write)
         else:
             # Building the merged-labels fence COMPILES a full physical
             # plan on the driver (a lazy localCheckpoint needs toRdd) —
@@ -866,7 +874,7 @@ def dedup_graph_maintenance(
             _pmark(f"graph b{batch_id}: band-index read built")
             # bands_new materialized (pfx collect) and the probe's file
             # listing done — overlap the index append with the CC path
-            _idx_fut = _idx_pool.submit(_index_write)
+            _idx_fut = idx_pool.submit(_index_write)
             bn = bands_new.select(
                 F.col("doc_id").alias("id_n"), "band_idx", "band_hash"
             )
@@ -983,7 +991,6 @@ def dedup_graph_maintenance(
         )
         _pmark(f"graph b{batch_id}: label delta write")
         _idx_fut.result()
-        _idx_pool.shutdown(wait=True)
         _pmark(f"graph b{batch_id}: index write joined")
         if deletes is not None:
             _write_fenced(
