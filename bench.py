@@ -295,7 +295,7 @@ HARD_BARS = {
 }
 
 
-def _engine_cpu_seconds() -> float:
+def _engine_cpu_seconds(seen: set[tuple[int, int]]) -> float:
     """Cumulative CPU seconds of the whole local engine: every descendant
     process of this bench process — the Spark JVM (driver AND executor
     threads in local mode) plus its pyspark daemon/worker children (where
@@ -304,33 +304,48 @@ def _engine_cpu_seconds() -> float:
     stall-immune CPU metric VERDICT r14 next #4 asks for: host scheduler
     stalls inflate wall-clock but not CPU, and at 100 TB saved parallel
     CPU is saved machines. Reaped children fold into their parent's
-    cutime/cstime, so deltas stay exact across worker churn. A /proc walk
-    costs ~5 ms — read OUTSIDE the timed window, never inside it."""
+    cutime/cstime, so deltas stay exact across worker churn. ``seen``
+    holds the (pid, start time) of every process the previous walk
+    counted, and is updated in place: a process seen earlier stays
+    counted after it is reparented out of this process's tree (a reused
+    pid has another start time), as ``perfbench/procstat.py`` tracks
+    them; one that then exits unreaped by the tree takes its time with
+    it, so callers clamp a per-pass delta at 0. A cgroup ``cpu.stat``
+    counter is not an option on a cgroup-v1 host whose processes sit in
+    the root ``cpu`` cgroup: there it counts the whole machine. A /proc
+    walk costs ~5 ms — read OUTSIDE the timed window, never inside it."""
     me = os.getpid()
     tick = os.sysconf("SC_CLK_TCK")
-    stats: dict[int, tuple[int, int]] = {}
+    # pid -> (ppid, start time, utime + stime + cutime + cstime)
+    stats: dict[int, tuple[int, int, int]] = {}
     for d in os.listdir("/proc"):
         if not d.isdigit():
             continue
         try:
             with open(f"/proc/{d}/stat", "rb") as f:
-                rest = f.read().split(b") ", 1)[1].split()
+                rest = f.read().rpartition(b")")[2].split()
             stats[int(d)] = (
                 int(rest[1]),
+                int(rest[19]),
                 int(rest[11]) + int(rest[12]) + int(rest[13]) + int(rest[14]),
             )
         except (OSError, IndexError, ValueError):
             continue
     children: dict[int, list[int]] = {}
-    for pid, (ppid, _) in stats.items():
+    for pid, (ppid, _, _) in stats.items():
         children.setdefault(ppid, []).append(pid)
-    total = 0
     todo = list(children.get(me, []))
+    todo += [p for p, start in seen if p in stats and stats[p][1] == start]
+    live: set[int] = set()
     while todo:
         pid = todo.pop()
-        total += stats[pid][1]
+        if pid in live:
+            continue
+        live.add(pid)
         todo.extend(children.get(pid, []))
-    return total / tick
+    seen.clear()
+    seen.update((pid, stats[pid][1]) for pid in live)
+    return sum(stats[pid][2] for pid in live) / tick
 
 
 def main() -> None:
@@ -367,16 +382,18 @@ def main() -> None:
     loadavg: dict[str, list[float]] = {name: [] for name in HEADLINERS}
     cpu_passes: dict[str, list[float]] = {name: [] for name in HEADLINERS}
     rows: dict[str, int] = {}
+    engine_procs: set[tuple[int, int]] = set()
 
     def run_one(name: str) -> None:
         fn = plans.REGISTRY[name].fn
         # CPU counters read strictly OUTSIDE the timed window (before t0 /
         # after the wall measurement) — the wall timing is unchanged
-        c0 = _engine_cpu_seconds()
+        c0 = _engine_cpu_seconds(engine_procs)
         t0 = time.perf_counter()
         rows[name] = fn(spark, sf_dir).count()
         passes[name].append(round(time.perf_counter() - t0, 4))
-        cpu_passes[name].append(round(_engine_cpu_seconds() - c0, 3))
+        c1 = _engine_cpu_seconds(engine_procs)
+        cpu_passes[name].append(round(max(0.0, c1 - c0), 3))
         loadavg[name].append(round(os.getloadavg()[0], 2))
 
     # DEDICATED FIRST BLOCK (VERDICT r6 next #3 / r7 next #5): the

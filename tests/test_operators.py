@@ -1066,6 +1066,14 @@ def test_minhash_kernel_matches_expression_form(spark):
         (903, "dup dup dup dup dup dup dup dup"),  # one distinct shingle
         (904, "  leading   and\ttrailing  spaces\n"),
         (905, None),  # NULL text
+        # non-ASCII: JVM toLowerCase vs Python str.lower, and Java \s
+        # (ASCII whitespace only) vs the kernel's explicit class
+        (910, "Café Crème brûlée CAFÉ crème Brûlée"),
+        (911, "Straße STRASSE straße Maß"),
+        (912, "İstanbul IŞIK ılık İSTANBUL ışık"),
+        (913, "ΟΔΥΣΣΕΥΣ ΚΑΙ ΣΟΦΟΣ ΛΟΓΟΣ σοφος λογος"),  # word-final Σ
+        (914, "one\u00a0two three\u2028four five\u0085six seven"),
+        (915, "ＡＢＣ ｆｕｌｌ ＷＩＤＴＨ ǅemal ǄEMAL ẞig ẞ"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     for k, n in ((8, 3), (4, 2)):
@@ -1105,6 +1113,32 @@ def test_minhash_kernel_matches_expression_form(spark):
             ).collect()
         }
         assert got == want and len(got) > 100
+
+
+def test_curate_dedup_plans_compute_once(spark, sf_dir):
+    """The curate dedup queries do their work once, pinned on the final
+    adaptive plans: ``dedup_minhash_lsh`` runs ONE signature kernel (the
+    second self-join leg reads the narrow signature exchange as a
+    ``ReusedExchange``) and no exchange carries ``text``;
+    ``dedup_ngram_jaccard``'s relative df cut is a scalar subquery, not
+    a nested-loop join per leg."""
+    from wikidatabots_spark import plans as _p
+
+    def final_plan(name):
+        df = _p.REGISTRY[name].fn(spark, sf_dir)
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "isFinalPlan=true" in plan, name
+        return plan.split("== Initial Plan ==")[0]
+
+    lsh = final_plan("dedup_minhash_lsh")
+    assert lsh.count("MapInArrow") == 1, lsh
+    reused = [l for l in lsh.splitlines() if "ReusedExchange" in l]
+    assert len(reused) == 1 and "mh0#" in reused[0], lsh
+    for line in lsh.splitlines():
+        if "Exchange" in line:
+            assert "text#" not in line, line.strip()[:120]
+    assert "BroadcastNestedLoopJoin" not in final_plan("dedup_ngram_jaccard")
 
 
 def test_semdedup_blocked_kernel_matches_expression_form(spark):

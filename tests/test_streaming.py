@@ -404,6 +404,32 @@ def test_incremental_dedup_probe_stream_matches_batch(spark, sf_dir):
     assert got == want and len(got) > 0
 
 
+def test_minhash_band_table_stream_is_a_narrow_map(spark, sf_dir):
+    """Over a streaming frame the band table is a pure narrow map: the
+    signature kernel runs on the micro-batch's own partitions and no
+    Exchange is planned (the batch form's repartition of an
+    under-partitioned input never applies to a stream)."""
+    from wikidatabots_spark.operators.dedup import minhash_band_table
+    from wikidatabots_spark.streaming.docs_stream import read_documents_stream
+
+    out = minhash_band_table(read_documents_stream(spark, sf_dir))
+    assert out.isStreaming
+    q = (
+        out.writeStream.format("memory")
+        .queryName("band_table_stream")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        assert q.awaitTermination(120), "stream did not drain"
+        plan = q._jsq.explainInternal(False)
+    finally:
+        q.stop()
+    assert "MapInArrow" in plan and "Exchange" not in plan, plan
+    assert spark.sql("select count(*) from band_table_stream").first()[0] > 0
+
+
 def test_watermark_drops_late_data_in_append_aggregation(spark, tmp_path):
     """Watermark EVICTION pin: an event arriving after the watermark
     passed its window must be dropped from an append-mode windowed
