@@ -1636,15 +1636,16 @@ def _gate_edge_rows():
     ]
 
 
-def test_token_bucket_kernel_matches_expression_form(spark):
+def test_token_bucket_kernel_matches_expression_form(spark, monkeypatch):
     """The r14 token-bucket mapInArrow kernel (bucket_occurrences /
     dsir_occurrences) emits EXACTLY the rows of the explode +
     _token_bucket + groupBy expression form it replaced — md5 is
     engine-independent, so the bucket ids are identical integers, not
     a collision tradeoff; NULL and token-free texts emit no rows in
-    both forms."""
+    both forms. Past the token memo's cap the rows are the same."""
     import random
 
+    from wikidatabots_spark.operators import textstats
     from wikidatabots_spark.operators.textstats import (
         _token_bucket,
         bucket_occurrences,
@@ -1696,19 +1697,27 @@ def test_token_bucket_kernel_matches_expression_form(spark):
     }
     assert got_s == want_s
 
+    # a memo cap below the vocabulary size: the kernel (pickled with the
+    # patched cap when the frame is built) hashes past it
+    monkeypatch.setattr(textstats, "MEMO_CAP", 3)
+    assert len({w.lower() for w in vocab}) > textstats.MEMO_CAP
+    assert {tuple(r) for r in bucket_occurrences(df).collect()} == want
 
-def test_lm_bigram_kernel_matches_string_reference(spark):
+
+def test_lm_bigram_kernel_matches_string_reference(spark, monkeypatch):
     """with_lm_score over the r14 pre-aggregated bigram kernel equals a
     string-keyed reference that never hashes: same tokenizer expression
     form as the old per-occurrence implementation, model and scoring
     keyed on the bigram STRINGS. Pins (a) the kernel's tokenize/pair
     semantics against the JVM expression form, (b) the cnt-weighted
     two-level aggregation against per-occurrence sums, and (c) that the
-    hash keys are an invisible internal detail (collisions aside)."""
+    hash keys are an invisible internal detail (collisions aside).
+    Past the word/bigram memo's cap the scores are the same."""
     import random
 
     from pyspark.sql import Window
 
+    from wikidatabots_spark.operators import lm
     from wikidatabots_spark.operators.lm import (
         LM_ALPHA,
         LM_SCALE,
@@ -1772,16 +1781,24 @@ def test_lm_bigram_kernel_matches_string_reference(spark):
     }
     assert got == want and len(got) == len(rows)
 
+    # a memo cap below the vocabulary size: the kernel (pickled with the
+    # patched cap when the frame is built) hashes past it
+    monkeypatch.setattr(lm, "MEMO_CAP", 3)
+    assert len({w.lower() for w in vocab}) > lm.MEMO_CAP
+    assert {tuple(r) for r in with_lm_score(df).collect()} == want
 
-def test_gate_kernel_matches_builder_chain(spark):
+
+def test_gate_kernel_matches_builder_chain(spark, monkeypatch):
     """gate_feature_counts + gate_features_from_counts reproduce the
     with_quality → with_lang_guess → with_repetition →
     with_classifier_score chain BIT-for-bit on every non-NULL-text row
     (exact double equality — same integers, same expression trees), and
     the NULL-text row both paths drop once the curation gate stack filters
-    run (the kernel omits it; the chain scores it below every gate)."""
+    run (the kernel omits it; the chain scores it below every gate).
+    Past the word-weight memo's cap the features are the same."""
     import random
 
+    from wikidatabots_spark.operators import textstats
     from wikidatabots_spark.operators.textstats import (
         _words_sql,
         gate_feature_counts,
@@ -1837,3 +1854,10 @@ def test_gate_kernel_matches_builder_chain(spark):
     got_g = {r.doc_id for r in fused.where(gates).collect()}
     want_g = {r.doc_id for r in chain.where(gates).collect()}
     assert got_g == want_g
+
+    # a memo cap below the vocabulary size: the kernel (pickled with the
+    # patched cap when the frame is built) hashes past it
+    monkeypatch.setattr(textstats, "MEMO_CAP", 3)
+    assert len(set(vocab)) > textstats.MEMO_CAP
+    capped = gate_features_from_counts(gate_feature_counts(df)).select(*cols)
+    assert {tuple(r) for r in capped.collect()} == want_nonnull

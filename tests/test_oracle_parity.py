@@ -13,12 +13,11 @@ from wikidatabots_spark import plans
 from wikidatabots_spark.sources.tables import TABLES
 
 FAST = [
-    "op_prefix_columns",
-    "op_unique_keep_none",
-    "op_regexp_extract_null",
-    "op_pl_format",
-    "op_topk",
-    "op_dates",
+    "op_null_prefix",
+    "op_unique",
+    "op_strings",
+    "op_order_collect",
+    "op_scalar_dates",
     "q1_pricing_summary",
     "q6_revenue_forecast",
     "q13_customer_distribution",

@@ -32,7 +32,7 @@ def test_registry_priority_window():
     assert len(set(PRIORITY)) == len(PRIORITY) == 50
     must_have = {
         # §2 micro pins named by the r1 verdict (try_cast/sample live in
-        # the merged op_scalar_micro / op_sample slots; A1/A2 unique and
+        # the merged op_scalar_dates / op_sample slots; A1/A2 unique and
         # U2/R1 explode merged r4 into op_unique/op_explode; T4
         # pl_format AND T1 regexp_extract_null folded into the
         # op_strings slot late-r4)
@@ -91,9 +91,11 @@ def test_registry_priority_window():
 
 
 # sha256 of each curation oracle as registered before the curate_corpus
-# versions became configurations of one builder: the oracle programs are
-# pinned byte for byte, so a builder refactor cannot move a result
-_CURATE_ORACLE_SHA256 = {
+# versions became configurations of one builder, and of each tagged query
+# whose legs are the only oracle check of the operator surfaces it
+# carries: the oracle programs are pinned byte for byte, so a refactor
+# cannot move a result.
+_PINNED_ORACLE_SHA256 = {
     "curate_corpus": "7296fdd9bacb56668c0a3e649af9135cb7bfad606ae19e351f300a275c599c5c",
     "curate_corpus_v2": "58cbfa5a35ef7de6c75341eeab217fc4aa21118ed0c188dd2955da15497beda8",
     "curate_corpus_v3": "7dfb9d5eb99da15126a12df58bb38b405f62369df4a405851fa45101e4bb1d0b",
@@ -102,10 +104,21 @@ _CURATE_ORACLE_SHA256 = {
     "curate_corpus_v6": "9ba2ba962ce1af061f838fad234ce1347e81d36d8ab856996acab6347199a044",
     "curate_corpus_v7": "10f22b560e5382a5e858d9a59408c8cd89794913d095fec4d35d7a5a9fe82bdb",
     "curate_corpus_v8": "463579376c38db8b0c7692441554b69aa78b76546ba56e1907cf4ea44bfa30fe",
+    "op_unique": "6e17c196110992610dcca2912d5e6881ee5cf203b75d2bf75a9dd51a8525da7b",
+    "op_sample": "22072be2b6ff746b8d4854842c715bd0aa02eb92c3f8f4ac4ad626e47f9036d2",
+    "op_strings": "e1874fc0089bd6df48e83c5818eb681cb10b1cf106a77bc403a519ea29b0b727",
+    "op_explode": "1649d8af29ec5689be9066f6141044c52a51c20702894d76a4678951da72add6",
+    "op_set_ops": "348e441f73cad80a531cf5197c772125ad1b16a5f3662f10b85a65295f38f3ee",
+    "op_order_collect": "90775fb7323183113987db1d98041fe1000cada0b228fe9fc07aff682ed533ee",
+    "op_join_micro": "505d04f40951f714636ba8ac7f061a3ed1a3085af0f60bd0c38e5842246097f7",
+    "op_scalar_dates": "9cbefa14b80cb50a01a2cfbe556daad50e853fba19b933aa611bf4e125054873",
+    "op_null_prefix": "f9face38d52bd7568719c56052eec567907148ba1c8fffa60ae66d77da03732e",
+    "dedup_simhash_pairs": "e255d4fd44cf81628d36544b0b1cb5e2fa6e249b42c9619abdf0675ad503eada",
+    "dq_monitor_suite": "bfff1ffdcbe51e6b57dacbc05f2f60df2532fc1ddc02ba23d54a7a62220d373e",
 }
 
-# sha256 of the sorted, newline-joined registered query names (278)
-_REGISTRY_NAMES_SHA256 = "aa6ef63cea81d4fbdf5a9c14013acf5bfcea2dc1a73d93bdc804d5867ac18862"
+# sha256 of the sorted, newline-joined registered query names (255)
+_REGISTRY_NAMES_SHA256 = "51940adc7e7c602ec5e5a4de65b8e70f7553481618b53a243185687cd199ef1d"
 
 
 def test_curate_oracles_are_unchanged():
@@ -116,12 +129,12 @@ def test_curate_oracles_are_unchanged():
     o = plans.oracle_sql()
     got = {
         n: hashlib.sha256(o[n].encode()).hexdigest()
-        for n in _CURATE_ORACLE_SHA256
+        for n in _PINNED_ORACLE_SHA256
     }
-    assert got == _CURATE_ORACLE_SHA256
+    assert got == _PINNED_ORACLE_SHA256
     q = plans.queries()
     assert list(q)[:50] == PRIORITY
-    assert len(q) == 278
+    assert len(q) == 255
     names = "\n".join(sorted(q)).encode()
     assert hashlib.sha256(names).hexdigest() == _REGISTRY_NAMES_SHA256
 

@@ -33,3 +33,29 @@ def test_default_driver_memory_is_half_ram_capped(tmp_path):
     meminfo.write_text("MemTotal:      131072000 kB\n")
     assert default_driver_memory(str(meminfo)) == "32768m"
     assert default_driver_memory(str(tmp_path / "missing")) == "32768m"
+
+
+def test_jvm_death_fails_one_test_and_the_next_gets_a_fresh_session(
+    pytester, monkeypatch
+):
+    """The conftest hook: a test during which the JVM dies fails with a
+    "JVM died" message, and the test after it runs on a new session."""
+    from pathlib import Path
+
+    here = Path(__file__).parent
+    pytester.makeconftest((here / "conftest.py").read_text())
+    pytester.makepyfile(
+        test_halt="""
+        def test_halts_the_jvm(spark):
+            spark.sparkContext._jvm.java.lang.Runtime.getRuntime().halt(1)
+
+        def test_runs_after(spark):
+            assert spark.range(3).count() == 3
+        """
+    )
+    monkeypatch.setenv("PYTHONPATH", str(here.parent))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "1")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "512m")
+    result = pytester.runpytest_subprocess("-p", "no:cacheprovider")
+    result.assert_outcomes(failed=1, passed=1)
+    result.stdout.fnmatch_lines(["*JVM died during test_halt.py::test_halts_the_jvm*"])

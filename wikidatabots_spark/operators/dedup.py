@@ -310,9 +310,9 @@ def minhash_signature_cols(
     ops. Each distinct shingle of a document is hashed once, through a
     per-task shingle→raw-digests memo (capped — Zipf repetition makes it
     pay, the cap bounds a long-lived task's memory; the same policy as
-    the lm.py bigram memo); the per-hash minima are taken over raw
-    16-byte digests and only the k minima are hex-encoded. Exact
-    equivalence with the expression form, pinned by
+    the lm.py bigram memo and the textstats token memos); the per-hash
+    minima are taken over raw 16-byte digests and only the k minima are
+    hex-encoded. Exact equivalence with the expression form, pinned by
     ``test_minhash_kernel_matches_expression_form``: the tokenizer
     replicates Spark ``split(lower(text), '\\s+')`` (Java ``\\s`` =
     ``[ \\t\\n\\x0B\\f\\r]``); ``md5(concat('<i>:', t))`` hashes the same

@@ -52,6 +52,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from wikidatabots_spark.operators.dedup import ensure_parallelism
+from wikidatabots_spark.operators.textstats import MEMO_CAP
 
 LM_SCALE = 1_000_000
 LM_ALPHA = 10  # pseudo-count added to the head marginal (shrinkage)
@@ -71,12 +72,12 @@ def bigram_occurrences(
     per occurrence — measured as the largest CPU part of the curate
     flagships (~39 s executor CPU at sf0.1 per ``with_lm_score`` call).
     Now a ``mapInArrow`` kernel: C-backed ``hashlib``/str ops over
-    whole Arrow batches, per-task token/bigram hash memo, and the
-    per-doc (bigram, cnt) aggregate emitted DIRECTLY — the downstream
-    model groupBy and scoring join consume pre-aggregated rows (the
-    two-level aggregation: per-doc partials in the kernel, global sums
-    after), so long documents shuffle one row per distinct bigram
-    instead of one per occurrence.
+    whole Arrow batches, a per-task token/bigram hash memo (capped at
+    ``MEMO_CAP`` entries), and the per-doc (bigram, cnt) aggregate
+    emitted DIRECTLY — the downstream model groupBy and scoring join
+    consume pre-aggregated rows (the two-level aggregation: per-doc
+    partials in the kernel, global sums after), so long documents
+    shuffle one row per distinct bigram instead of one per occurrence.
 
     Hash keys are md5-derived int64 (first 8 digest bytes, signed
     big-endian) instead of the former ``xxhash64``: both are internal
@@ -112,7 +113,8 @@ def bigram_occurrences(
                     "big",
                     signed=True,
                 )
-                memo[s] = v
+                if len(memo) < MEMO_CAP:
+                    memo[s] = v
             return v
 
         for batch in batches:

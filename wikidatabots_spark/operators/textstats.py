@@ -40,6 +40,13 @@ LANG_MARKERS: dict[str, list[str]] = {
 _PUNCT_RE = r"[^.,!?;:]"
 _SUBTOKEN_RE = r"[a-z]+|[0-9]+|[^a-z0-9\s]"
 
+# per-task cap of the Arrow kernels' str → int memos (token → bucket or
+# weight here, word/bigram → key in lm.py): an entry (a fresh 8-17 char
+# string, an int and its dict slot) measures 110-130 bytes under
+# tracemalloc, so 115-140 MB at the cap; past it a kernel hashes without
+# memoizing — same values, bounded memory
+MEMO_CAP = 1 << 20
+
 
 def words(text: Column) -> Column:
     """Lowercased whitespace tokens, empties removed."""
@@ -333,7 +340,8 @@ def gate_feature_counts(
                     % CLS_BUCKETS
                 )
                 v = (b * _CLS_MULT) % _CLS_RANGE - half
-                wmemo[w] = v
+                if len(wmemo) < MEMO_CAP:
+                    wmemo[w] = v
             return v
 
         for batch in batches:
@@ -876,8 +884,7 @@ def token_bucket_counts(
 
         ws = re.compile("[ \\t\\n\\x0b\\f\\r]+")  # Java regex \s
         # per-task token→bucket memo: corpora repeat tokens heavily
-        # (Zipf), so this removes most md5 calls; bounded by the task's
-        # distinct-token count
+        # (Zipf), so this removes most md5 calls; capped at MEMO_CAP
         memo: dict[str, int] = {}
 
         def bucket(w: str) -> int:
@@ -887,7 +894,8 @@ def token_bucket_counts(
                     int(hashlib.md5(w.encode("utf-8")).hexdigest()[:4], 16)
                     % CLS_BUCKETS
                 )
-                memo[w] = b
+                if len(memo) < MEMO_CAP:
+                    memo[w] = b
             return b
 
         for batch in batches:

@@ -701,34 +701,6 @@ def op_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- null-handling sweep ---------------------------------------------------
-@register(
-    "op_null_funcs",
-    oracle="""
-SELECT o_orderkey,
-       COALESCE(NULLIF(o_orderstatus, 'F'), 'final') AS status2,
-       CASE WHEN o_orderstatus = 'O' THEN NULL ELSE o_totalprice END AS maybe_price,
-       COALESCE(CASE WHEN o_orderstatus = 'O' THEN NULL
-                     ELSE o_totalprice END, -1.0) AS price_or_neg1,
-       (CASE WHEN o_orderstatus = 'O' THEN NULL
-             ELSE o_totalprice END) IS NULL AS is_open
-FROM orders
-""",
-)
-def op_null_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load_table(spark, sf_dir, "orders")
-    maybe = F.when(F.col("o_orderstatus") != "O", F.col("o_totalprice"))
-    return o.select(
-        "o_orderkey",
-        F.coalesce(F.nullif(F.col("o_orderstatus"), F.lit("F")), F.lit("final")).alias(
-            "status2"
-        ),
-        maybe.alias("maybe_price"),
-        F.coalesce(maybe, F.lit(-1.0)).alias("price_or_neg1"),
-        maybe.isNull().alias("is_open"),
-    )
-
-
 # --- full outer + cross joins ----------------------------------------------
 @register(
     "op_full_outer_join",
@@ -844,11 +816,9 @@ FROM nation
 """,
 )
 def op_null_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """op_null_funcs (F1-F5: null tests / nullif / coalesce sweep) +
-    op_prefix_columns (P6: all-columns rename) folded into one tagged
-    frame so both keep driver-hash pins in a single capped-window slot
-    (the op_unique pattern); the individual micro-queries stay
-    registered for the local gate."""
+    """The null-handling sweep (``null_funcs``, F1-F5: null tests /
+    nullif / coalesce) and the all-columns rename (``prefix``, P6:
+    ``prefix_columns``) as one tagged frame."""
     from wikidatabots_spark.functions.core import prefix_columns
 
     o = load_table(spark, sf_dir, "orders")

@@ -889,13 +889,6 @@ FROM fp a JOIN fp b ON a.simhash = b.simhash AND a.doc_id < b.doc_id
 """
 
 
-@register("dedup_simhash", oracle=_simhash_pairs_oracle())
-def dedup_simhash_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from wikidatabots_spark.operators.dedup import simhash_dup_pairs
-
-    return simhash_dup_pairs(load_table(spark, sf_dir, "documents"))
-
-
 @register("dedup_embedding_cosine_blas", oracle=_EMB_DUP_ORACLE)
 def dedup_embedding_cosine_blas_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same operator, vectorized-Pandas-UDF execution: blocked numpy
@@ -933,13 +926,6 @@ WHERE bit_count(xor(fp_a, fp_b)) <= 2
 """
 
 
-@register("dedup_simhash_near", oracle=_simhash_near_oracle())
-def dedup_simhash_near_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from wikidatabots_spark.operators.dedup import simhash_near_pairs
-
-    return simhash_near_pairs(load_table(spark, sf_dir, "documents"), max_hamming=2)
-
-
 def _simhash_both_oracle() -> str:
     return f"""
 SELECT 'exact' AS leg, id_a, id_b, CAST(simhash AS BIGINT) AS metric
@@ -952,12 +938,11 @@ FROM ({_simhash_near_oracle()})
 
 @register("dedup_simhash_pairs", oracle=_simhash_both_oracle())
 def dedup_simhash_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-window slot carrying BOTH simhash legs (the r5 merged-slot
-    pattern, freeing a window seat for the r7-mandated deletion/monitor
-    queries): the exact fingerprint-collision pairs and the banded
-    Hamming≤2 near-pairs, union-tagged by ``leg`` with the per-leg
-    metric (fingerprint / Hamming distance) normalized to BIGINT. The
-    individual queries stay registered for the local gate."""
+    """Both simhash dedup legs in one frame: the exact
+    fingerprint-collision pairs (``simhash_dup_pairs``) and the banded
+    Hamming≤2 near-pairs (``simhash_near_pairs``), union-tagged by
+    ``leg`` with the per-leg metric (fingerprint / Hamming distance)
+    normalized to BIGINT."""
     from wikidatabots_spark.operators.dedup import (
         simhash_dup_pairs,
         simhash_near_pairs,
@@ -2634,8 +2619,8 @@ def mm_phash_near_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual near-dup media pairs: aHash (mean-thresholded feature
     bytes, engine-exact integer math) + pigeonhole Hamming-LSH (16-bit
     hash, 4 slices of 4 bits, exact recall ≤ 3 flipped bits) — the
-    media analog of dedup_simhash_near, reusing the same generic
-    hamming_near_pairs machinery. The blob never shuffles; only the
+    media analog of dedup_simhash_pairs' near leg, reusing the same
+    generic hamming_near_pairs machinery. The blob never shuffles; only the
     16-bit hash does. (At production scale use a 64-bit phash — a
     16-bit space birthday-collides quickly; dims here match the
     container's stubbed 16-dim features.)"""

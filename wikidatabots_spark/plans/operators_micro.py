@@ -1,7 +1,9 @@
 """Micro-queries: one oracle-checked query per SURVEY.md §2 operator family.
 
-Each exercises exactly one ⚠-gap helper or operator so the correctness
-gate pins its semantics independently of the composite pipelines.
+Each pins a ⚠-gap helper or operator family independently of the
+composite pipelines. A family with several surfaces is one tagged frame
+(a ``kind`` column names the leg), so a leg's rows are a filter of the
+query's rows.
 """
 
 from __future__ import annotations
@@ -12,62 +14,12 @@ from pyspark.sql import functions as F
 from wikidatabots_spark.functions.core import (
     between_left_closed,
     pl_format,
-    prefix_columns,
     regexp_extract_null,
     unique_first_by,
     unique_keep_none,
 )
 from wikidatabots_spark.plans.registry import register
 from wikidatabots_spark.sources.tables import load_table
-
-
-# --- P6: column prefixing -------------------------------------------------
-@register(
-    "op_prefix_columns",
-    oracle="""
-SELECT n_nationkey AS wd_n_nationkey, n_name AS wd_n_name,
-       n_regionkey AS wd_n_regionkey
-FROM nation
-""",
-)
-def op_prefix_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return prefix_columns(load_table(spark, sf_dir, "nation"), "wd_")
-
-
-# --- A1: dedup keeping first by explicit order ----------------------------
-@register(
-    "op_unique_first_by",
-    oracle="""
-SELECT l_orderkey, l_partkey, l_linenumber
-FROM (
-    SELECT l_orderkey, l_partkey, l_linenumber,
-           row_number() OVER (PARTITION BY l_orderkey
-                              ORDER BY l_linenumber, l_partkey) AS rn
-    FROM lineitem
-) WHERE rn = 1
-""",
-)
-def op_unique_first_by(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_linenumber"
-    )
-    return unique_first_by(li, ["l_orderkey"], ["l_linenumber", "l_partkey"])
-
-
-# --- A2/F7: unique keep none ----------------------------------------------
-@register(
-    "op_unique_keep_none",
-    oracle="""
-SELECT o_orderkey, o_custkey FROM (
-    SELECT o_orderkey, o_custkey,
-           COUNT(*) OVER (PARTITION BY o_custkey) AS cnt
-    FROM orders
-) WHERE cnt = 1
-""",
-)
-def op_unique_keep_none(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    return unique_keep_none(o, "o_custkey")
 
 
 # --- A1+A2 merged: both unique surfaces in one driver slot -----------------
@@ -93,10 +45,9 @@ FROM (
 """,
 )
 def op_unique(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """op_unique_first_by (A1) + op_unique_keep_none (A2) folded into one
-    tagged frame so both unique semantics keep driver-hash pins in a
-    single capped-window slot (VERDICT r3 next #5); the individual
-    micro-queries stay registered for the local gate."""
+    """Both unique semantics as one tagged frame: ``first_by`` (A1, keep
+    the first row per key by an explicit order) and ``keep_none`` (A2/F7,
+    drop every key that occurs more than once)."""
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_linenumber"
     )
@@ -116,89 +67,6 @@ def op_unique(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(None).cast("bigint").alias("k3"),
     )
     return first_by.unionByName(keep_none)
-
-
-# --- T1: regex extract with null-on-miss ----------------------------------
-@register(
-    "op_regexp_extract_null",
-    oracle="""
-SELECT c_custkey,
-       CASE WHEN regexp_extract(c_name, 'Customer#(0*([1-9][0-9]*|0))', 2) = ''
-            THEN NULL
-            ELSE regexp_extract(c_name, 'Customer#(0*([1-9][0-9]*|0))', 2) END
-           AS cust_num,
-       CASE WHEN regexp_extract(c_mktsegment, '([0-9]+)', 1) = ''
-            THEN NULL
-            ELSE regexp_extract(c_mktsegment, '([0-9]+)', 1) END AS no_match
-FROM customer
-""",
-)
-def op_regexp_extract_null(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cu = load_table(spark, sf_dir, "customer")
-    return cu.select(
-        "c_custkey",
-        regexp_extract_null(
-            F.col("c_name"), r"Customer#(0*([1-9][0-9]*|0))", 2
-        ).alias("cust_num"),
-        regexp_extract_null(F.col("c_mktsegment"), r"([0-9]+)", 1).alias("no_match"),
-    )
-
-
-# --- T2/R1: regex extract-all + explode -----------------------------------
-@register(
-    "op_regexp_extract_all",
-    oracle="""
-SELECT doc_id,
-       COALESCE(array_to_string(regexp_extract_all(text, '([a-z]*an[a-z]*)', 1), ','),
-                '') AS an_words
-FROM documents
-""",
-)
-def op_regexp_extract_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id",
-        F.array_join(
-            F.regexp_extract_all(F.col("text"), F.lit(r"([a-z]*an[a-z]*)"), 1), ","
-        ).alias("an_words"),
-    )
-
-
-@register(
-    "op_explode_words",
-    oracle="""
-SELECT doc_id, unnest(string_split_regex(text, '\\s+')) AS word
-FROM documents
-WHERE doc_id < 100
-""",
-)
-def op_explode_words(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 100)
-    return d.select(
-        "doc_id",
-        F.explode(F.split(F.col("text"), r"\s+")).alias("word"),
-    )
-
-
-# --- T4: null-propagating format ------------------------------------------
-@register(
-    "op_pl_format",
-    oracle="""
-SELECT o_orderkey,
-       'order ' || o_orderkey || ' status ' ||
-       (CASE WHEN o_orderstatus = 'F' THEN NULL ELSE o_orderstatus END)
-           AS line
-FROM orders
-""",
-)
-def op_pl_format(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Null arg → null output (Polars pl.format semantics)."""
-    o = load_table(spark, sf_dir, "orders")
-    maybe_null = F.when(F.col("o_orderstatus") != "F", F.col("o_orderstatus"))
-    return o.select(
-        "o_orderkey",
-        pl_format("order {} status {}", F.col("o_orderkey"), maybe_null).alias("line"),
-    )
 
 
 # --- F6: left-closed between ----------------------------------------------
@@ -239,135 +107,7 @@ def op_when_otherwise(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- N1: lenient cast ------------------------------------------------------
-@register(
-    "op_try_cast",
-    oracle="""
-SELECT o_orderkey,
-       TRY_CAST(substr(o_orderpriority, 1, 1) AS INT) AS prio_num,
-       TRY_CAST(o_orderstatus AS INT) AS status_num
-FROM orders
-""",
-)
-def op_try_cast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load_table(spark, sf_dir, "orders")
-    return o.select(
-        "o_orderkey",
-        F.substring("o_orderpriority", 1, 1).try_cast("int").alias("prio_num"),
-        F.col("o_orderstatus").try_cast("int").alias("status_num"),
-    )
-
-
-# --- U1: schema-aligned union-all -----------------------------------------
-@register(
-    "op_union_all",
-    oracle="""
-SELECT c_name AS name, 'customer' AS kind FROM customer
-UNION ALL
-SELECT s_name AS name, 'supplier' AS kind FROM supplier
-""",
-)
-def op_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cu = load_table(spark, sf_dir, "customer").select(
-        F.col("c_name").alias("name"), F.lit("customer").alias("kind")
-    )
-    su = load_table(spark, sf_dir, "supplier").select(
-        F.col("s_name").alias("name"), F.lit("supplier").alias("kind")
-    )
-    return cu.unionByName(su)
-
-
-# --- J4: different-name join keys -----------------------------------------
-@register(
-    "op_join_diff_keys",
-    oracle="""
-SELECT s_suppkey, s_name, n_name
-FROM supplier LEFT JOIN nation ON s_nationkey = n_nationkey
-""",
-)
-def op_join_diff_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    su = load_table(spark, sf_dir, "supplier")
-    na = load_table(spark, sf_dir, "nation")
-    return su.join(
-        F.broadcast(na), su.s_nationkey == na.n_nationkey, "left"
-    ).select("s_suppkey", "s_name", "n_name")
-
-
-# --- F8/J5: anti-membership against a computed set ------------------------
-@register(
-    "op_anti_join",
-    oracle="""
-SELECT c_custkey, c_name
-FROM customer
-WHERE NOT EXISTS (
-    SELECT 1 FROM orders
-    WHERE o_custkey = c_custkey AND o_orderstatus = 'F'
-)
-""",
-)
-def op_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cu = load_table(spark, sf_dir, "customer")
-    f_orders = (
-        load_table(spark, sf_dir, "orders")
-        .where(F.col("o_orderstatus") == "F")
-        .select(F.col("o_custkey").alias("c_custkey"))
-    )
-    return cu.join(f_orders, on="c_custkey", how="left_anti").select(
-        "c_custkey", "c_name"
-    )
-
-
-# --- A3: sorted whole-group collect ---------------------------------------
-@register(
-    "op_collect_sorted",
-    oracle="""
-SELECT n_regionkey,
-       array_to_string(list_sort(list(n_name)), ',') AS nations
-FROM nation
-GROUP BY n_regionkey
-""",
-)
-def op_collect_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    na = load_table(spark, sf_dir, "nation")
-    return na.groupBy("n_regionkey").agg(
-        F.array_join(F.array_sort(F.collect_list("n_name")), ",").alias("nations")
-    )
-
-
-# --- O1/O2: total-order top-k ---------------------------------------------
-@register(
-    "op_topk",
-    oracle="""
-SELECT o_orderkey, o_totalprice
-FROM orders
-ORDER BY o_totalprice DESC, o_orderkey
-LIMIT 10
-""",
-)
-def op_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load_table(spark, sf_dir, "orders")
-    return (
-        o.select("o_orderkey", "o_totalprice")
-        .orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
-        .limit(10)
-    )
-
-
-# --- O3: deterministic modulo "sample" ------------------------------------
-@register(
-    "op_sample_mod",
-    oracle="SELECT o_orderkey, o_totalprice FROM orders WHERE o_orderkey % 20 = 0",
-)
-def op_sample_mod(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic stand-in for O3 sampling (seeded RNGs differ across
-    engines; ``sample`` itself is pytest-verified by row count)."""
-    o = load_table(spark, sf_dir, "orders")
-    return o.select("o_orderkey", "o_totalprice").where(
-        F.col("o_orderkey") % 20 == 0
-    )
-
-
-# --- O3: fraction sampling, deterministic hash-Bernoulli form --------------
+# --- O3: md5 hash-bucket membership (the hash_frac leg of op_sample) --------
 _HASH_DIGIT = (
     "(strpos('0123456789abcdef',"
     " substr(md5(CAST(o_orderkey AS VARCHAR)), {j}, 1)) - 1)"
@@ -377,27 +117,7 @@ _HASH_BUCKET = " + ".join(
 )
 
 
-@register(
-    "op_sample_fraction",
-    oracle=f"""
-SELECT o_orderkey, o_totalprice
-FROM orders
-WHERE {_HASH_BUCKET} < 16384
-""",
-)
-def op_sample_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O3's fraction surface via ``sample_hash`` — the reproducible analog
-    of ``sample(fraction=0.25)``: membership = md5(key) in the low quarter
-    of hash space, identical in any engine (RNG fraction sampling itself is
-    pytest-verified; this pins the deterministic production variant used
-    for stable train/holdout splits)."""
-    from wikidatabots_spark.functions.core import sample_hash
-
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    return sample_hash(o, "o_orderkey", 0.25)
-
-
-# --- O3 merged: both deterministic sampling surfaces in one driver slot ----
+# --- O3: both deterministic sampling surfaces in one tagged frame ---------
 @register(
     "op_sample",
     oracle=f"""
@@ -409,9 +129,12 @@ FROM orders WHERE {_HASH_BUCKET} < 16384
 """,
 )
 def op_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """op_sample_mod + op_sample_fraction folded into one tagged frame so
-    O3 keeps a single slot in the driver's capped window (VERDICT r2 next
-    #2); the individual micro-queries stay registered for the local gate."""
+    """O3 sampling, deterministic in any engine (seeded RNG sampling
+    differs across engines and is pytest-verified by row count), as one
+    tagged frame: ``mod`` keeps every 20th order key, and ``hash_frac``
+    is ``sample_hash(fraction=0.25)`` — md5(key) in the low quarter of
+    hash space, the reproducible analog of ``sample(fraction=0.25)``
+    used for stable train/holdout splits."""
     from wikidatabots_spark.functions.core import sample_hash
 
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
@@ -424,7 +147,7 @@ def op_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mod.unionByName(frac)
 
 
-# --- T1+T2+T3+T4 merged: extract-null + replace + extract-all + pl_format --
+# --- T1-T4: extract-null + replace + extract-all + pl_format ---------------
 @register(
     "op_strings",
     oracle="""
@@ -458,13 +181,12 @@ FROM customer
 """,
 )
 def op_strings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """op_replace_literal + op_regexp_extract_all + op_pl_format (T4
-    null-propagating format, folded r4 to free a window slot for
-    curate_corpus_v4) + op_regexp_extract_null (T1 null-on-miss, folded
-    late-r4 to free a slot for text_lm_score — both the match and the
-    guaranteed-miss leg, so the Polars null-vs-'' gap stays pinned) as
-    one tagged frame (driver-window budget; individuals stay for the
-    local gate)."""
+    """The string family as one tagged frame: T3 literal ``replace``, T2
+    ``extract_all`` (regexp_extract_all joined with ','), T4 ``pl_format``
+    (null argument → null output, Polars ``pl.format`` semantics) and T1
+    ``regexp_extract_null`` with both a matching leg (``extract_null``)
+    and a guaranteed-miss leg (``extract_null_miss``), so the Polars
+    null-vs-'' gap stays pinned."""
     p = load_table(spark, sf_dir, "part").select(
         F.lit("replace").alias("kind"),
         F.col("p_partkey").cast("bigint").alias("key"),
@@ -502,74 +224,6 @@ def op_strings(spark: SparkSession, sf_dir: str) -> DataFrame:
     return p.unionByName(d).unionByName(fmt).unionByName(enull).unionByName(emiss)
 
 
-# --- F6+F9+N1 merged: scalar predicate/cast family over one scan -----------
-@register(
-    "op_scalar_micro",
-    oracle="""
-SELECT o_orderkey,
-       (o_totalprice >= 50000 AND o_totalprice < 100000) AS in_band,
-       TRY_CAST(substr(o_orderpriority, 1, 1) AS INT) AS prio_num,
-       TRY_CAST(o_orderstatus AS INT) AS status_num,
-       CASE WHEN o_totalprice < 50000 THEN 'low'
-            WHEN o_totalprice < 150000 THEN 'mid'
-            ELSE 'high' END AS tier
-FROM orders
-""",
-)
-def op_scalar_micro(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """between_left_closed (F6) + try_cast (N1) + when/otherwise (F9) as
-    columns of one projection — three scalar-operator pins in one driver
-    slot and one codegen stage over a single scan."""
-    o = load_table(spark, sf_dir, "orders")
-    return o.select(
-        "o_orderkey",
-        between_left_closed(F.col("o_totalprice"), 50000, 100000).alias("in_band"),
-        F.substring("o_orderpriority", 1, 1).try_cast("int").alias("prio_num"),
-        F.col("o_orderstatus").try_cast("int").alias("status_num"),
-        F.when(F.col("o_totalprice") < 50000, F.lit("low"))
-        .when(F.col("o_totalprice") < 150000, F.lit("mid"))
-        .otherwise(F.lit("high"))
-        .alias("tier"),
-    )
-
-
-# --- T7/D2/D3: date parse / trunc -----------------------------------------
-@register(
-    "op_dates",
-    oracle="""
-SELECT o_orderkey,
-       CAST(o_orderdate AS DATE) AS order_date,
-       CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS order_month,
-       strftime(o_orderdate, '%Y-%m-%d') AS order_iso
-FROM orders
-""",
-)
-def op_dates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load_table(spark, sf_dir, "orders")
-    return o.select(
-        "o_orderkey",
-        F.to_date("o_orderdate").alias("order_date"),
-        F.date_trunc("month", F.col("o_orderdate")).alias("order_month"),
-        F.date_format("o_orderdate", "yyyy-MM-dd").alias("order_iso"),
-    )
-
-
-# --- T3: literal string replace -------------------------------------------
-@register(
-    "op_replace_literal",
-    oracle="""
-SELECT p_partkey, replace(p_name, 'widget', 'gadget') AS renamed
-FROM part
-""",
-)
-def op_replace_literal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = load_table(spark, sf_dir, "part")
-    return p.select(
-        "p_partkey",
-        F.replace(F.col("p_name"), F.lit("widget"), F.lit("gadget")).alias("renamed"),
-    )
-
-
 # --- S1: parquet scan through the URL adapter ------------------------------
 @register(
     "op_scan_parquet_url",
@@ -586,33 +240,7 @@ def op_scan_parquet_url(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- R1⚠: explode_outer keeps rows with empty/null arrays ------------------
-@register(
-    "op_explode_outer",
-    oracle="""
-SELECT doc_id,
-       unnest(CASE WHEN len(m) = 0 THEN [NULL] ELSE m END) AS zz_word
-FROM (
-    SELECT doc_id, regexp_extract_all(text, '(zz[a-z]+)', 1) AS m
-    FROM documents
-)
-""",
-)
-def op_explode_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Polars explode keeps a null row for empty lists; Spark's plain
-    explode drops them — explode_outer restores the reference semantics
-    (SURVEY §2.8 R1⚠). Most docs have no 'zz…' match → the null rows are
-    the point."""
-    d = load_table(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id",
-        F.explode_outer(
-            F.regexp_extract_all(F.col("text"), F.lit(r"(zz[a-z]+)"), 1)
-        ).alias("zz_word"),
-    )
-
-
-# --- U2+R1 merged: both explode surfaces in one driver slot ----------------
+# --- U2 + R1: both explode surfaces in one tagged frame -------------------
 @register(
     "op_explode",
     oracle="""
@@ -630,10 +258,11 @@ FROM (
 """,
 )
 def op_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """op_explode_words (U2) + op_explode_outer (R1⚠, null row per empty
-    list) folded into one tagged frame — one capped-window slot for the
-    explode family (VERDICT r3 next #5); individuals stay registered for
-    the local gate."""
+    """The explode family as one tagged frame: ``words`` (U2, split +
+    explode) and ``zz_outer`` (R1⚠). Polars explode keeps a null row for
+    an empty list; Spark's plain explode drops it, and explode_outer
+    restores the reference semantics. Most docs have no 'zz…' match, so
+    the null rows are the point."""
     d = load_table(spark, sf_dir, "documents")
     words = d.where(F.col("doc_id") < 100).select(
         F.lit("words").alias("kind"),
@@ -725,11 +354,10 @@ SELECT 'concat_supplier' AS kind, CAST(NULL AS BIGINT) AS key,
 )
 def op_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All three set operators PLUS the U1 schema-aligned vertical
-    concat (folded from op_union_all in r5 to free a driver-window slot
-    for the incremental-CC flagship; the standalone op_union_all stays
-    registered for the local gate) in one tagged driver-checked frame:
-    UNION (distinct), INTERSECT, a non-vacuous EXCEPT, and the
-    unionByName concat of two differently-sourced name frames."""
+    concat in one tagged frame: UNION (distinct), INTERSECT, a
+    non-vacuous EXCEPT, and the unionByName concat of two
+    differently-sourced name frames (``concat_customer`` /
+    ``concat_supplier``)."""
     cu = load_table(spark, sf_dir, "customer")
     su = load_table(spark, sf_dir, "supplier")
     cn = cu.select(F.col("c_nationkey").cast("bigint").alias("key"))
@@ -959,7 +587,7 @@ def op_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).distinct()
 
 
-# --- A3+O1/O2 merged: sorted collect + total-order top-k in one slot -------
+# --- A3 + O1/O2: sorted collect + total-order top-k in one tagged frame ---
 @register(
     "op_order_collect",
     oracle="""
@@ -980,11 +608,9 @@ FROM (
 """,
 )
 def op_order_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """op_collect_sorted (A3) + op_topk (O1/O2) folded into one tagged
-    frame so both ordering surfaces keep driver-hash pins in a single
-    capped-window slot (the op_unique pattern); the individual
-    micro-queries stay registered for the local gate. The merge freed
-    the window slot now held by ``corpus_tokenize_ids``."""
+    """Both ordering surfaces as one tagged frame: ``collect`` (A3,
+    sorted whole-group collect per region) and ``topk`` (O1/O2, the 10
+    largest orders under a total order with the key as tie-break)."""
     na = load_table(spark, sf_dir, "nation")
     collect = na.groupBy("n_regionkey").agg(
         F.array_join(F.array_sort(F.collect_list("n_name")), ",").alias("txt")
@@ -1009,7 +635,7 @@ def op_order_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
     return collect.unionByName(topk)
 
 
-# --- J4+J5 merged: both join surfaces in one driver slot -------------------
+# --- J4 + J5: both join surfaces in one tagged frame ----------------------
 @register(
     "op_join_micro",
     oracle="""
@@ -1027,12 +653,9 @@ WHERE NOT EXISTS (
 """,
 )
 def op_join_micro(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """op_join_diff_keys (J4: left equi-join on differently-named keys,
-    broadcast dim) + op_anti_join (J5: anti-membership against a
-    computed set) folded into one tagged frame so both join semantics
-    keep driver-hash pins in a single capped-window slot (the op_unique
-    pattern); the individual micro-queries stay registered for the
-    local gate."""
+    """Both join semantics as one tagged frame: ``left_diff_keys`` (J4,
+    left equi-join on differently-named keys, broadcast dim) and
+    ``anti`` (F8/J5, anti-membership against a computed set)."""
     su = load_table(spark, sf_dir, "supplier")
     na = load_table(spark, sf_dir, "nation")
     diff_keys = su.join(
@@ -1310,7 +933,7 @@ def op_higher_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- F6/N1/F9 + T7/D1-D3 merged: one orders projection, one driver slot ----
+# --- F6/N1/F9 + T7/D1-D3: one orders projection ---------------------------
 @register(
     "op_scalar_dates",
     oracle="""
@@ -1328,13 +951,11 @@ FROM orders
 """,
 )
 def op_scalar_dates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """op_scalar_micro (F6 between / N1 try_cast / F9 when-otherwise)
-    and op_dates (T7 ISO parse / D2 ts->date / D3 trunc) merged into
-    ONE projection over the shared orders scan — both micro groups keep
-    driver-hash pins while occupying a single capped-window slot (the
-    r5 merge freeing a seat for text_classifier_trained; the individual
-    micros stay registered for the local gate). Same row key, so the
-    merge is column concatenation, not a tagged union."""
+    """The scalar family (F6 left-closed between, N1 try_cast, F9
+    when/otherwise) and the date family (T7 ISO format, D2 ts->date, D3
+    month trunc) as columns of ONE projection over one orders scan —
+    one codegen stage, no tag needed because every column shares the
+    row key."""
     o = load_table(spark, sf_dir, "orders")
     return o.select(
         "o_orderkey",

@@ -4502,7 +4502,8 @@ def corpus_curriculum_order_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# dq_key_skew — join-key skew diagnosis (the pre-salting monitor)
+# join-key skew diagnosis (the pre-salting monitor; the skew leg of
+# retrieval.dq_monitor_suite)
 # ---------------------------------------------------------------------------
 
 _KEY_SKEW_ORACLE = """
@@ -4528,7 +4529,6 @@ FROM freq GROUP BY key_family
 """
 
 
-@register("dq_key_skew", oracle=_KEY_SKEW_ORACLE)
 def dq_key_skew_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join-key skew diagnosis across the three join-key families a
     plan would shuffle on: rows, distinct keys, the hottest key's row

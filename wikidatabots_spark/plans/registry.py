@@ -39,20 +39,16 @@ REGISTRY: dict[str, Entry] = {}
 # local gate (scripts/check_oracle.py runs ALL entries) — only the driver's
 # capped window is ordered here.
 PRIORITY: list[str] = [
-    # §2 micro-queries (one per operator family; the O3 sampling pair,
-    # the T2/T3 string pair, the F6/F9/N1 scalar trio, the A1/A2 unique
-    # pair, the U2/R1 explode pair, the J4/J5 join pair, and the
-    # F-nulls/P6 pair are folded into tagged merged queries — op_sample
-    # / op_strings / op_scalar_micro / op_unique / op_explode /
-    # op_join_micro / op_null_prefix — so the window budget covers the
-    # graded composed pipelines below; the individual micro-queries
-    # stay registered for the local gate)
+    # §2 micro-queries, one per operator family; a family with several
+    # surfaces (O3 sampling, T1-T4 strings, F6/F9/N1 scalars + dates,
+    # A1/A2 unique, U2/R1 explode, J4/J5 joins, F-nulls/P6) is one
+    # tagged query, so the window budget covers the graded composed
+    # pipelines below
     "op_null_prefix",
     "op_unique",
     "op_explode",
-    # op_scalar_micro + op_dates merged into op_scalar_dates in r5
-    # (same orders scan, column concatenation) to seat the trained
-    # classifier; both individual micros stay locally gated
+    # the scalar and date families share one orders projection (r5),
+    # which seated the trained classifier
     "op_scalar_dates",
     "op_join_micro",
     "op_order_collect",
@@ -60,7 +56,6 @@ PRIORITY: list[str] = [
     "op_strings",
     "op_scan_parquet_url",
     # op_set_ops additionally carries the U1 vertical-concat leg since r5
-    # (op_union_all folded in; the standalone micro stays locally gated)
     "op_set_ops",
     # the reference's five pipelines + the two composed mains
     "tmdb_via_imdb",
@@ -88,9 +83,7 @@ PRIORITY: list[str] = [
     "dedup_exact",
     "dedup_minhash_lsh",
     "dedup_ngram_jaccard",
-    # dedup_simhash + dedup_simhash_near merged into one union-tagged
-    # slot in r8 (the op_scalar_dates merge pattern); the individual
-    # queries stay registered for the local gate
+    # the exact and near simhash legs share one union-tagged slot (r8)
     "dedup_simhash_pairs",
     "dedup_embedding_cosine",
     "dedup_embedding_cosine_lsh",
@@ -116,20 +109,20 @@ PRIORITY: list[str] = [
     # promoted r4b (T1 regexp_extract_null folded into op_strings too):
     # the CCNet-shaped LM quality ranking
     "text_lm_score",
-    # promoted r4c (A3 collect + O1/O2 topk folded into op_order_collect):
+    # promoted r4c (A3 collect + O1/O2 topk share op_order_collect):
     # the trainer-path tokenizer — corpus -> token ids -> pack -> shards
     "corpus_tokenize_ids",
-    # promoted r4d (J4/J5 merged into op_join_micro, F-nulls/P6 into
+    # promoted r4d (J4/J5 share op_join_micro, F-nulls/P6 share
     # op_null_prefix): the PQ/ADC ANN index lifecycle and BPE merge
     # training — the similarity-search and tokenizer flagships
     "knn_pq_adc",
     "corpus_bpe_train",
-    # promoted r5 (op_union_all folded into op_set_ops): the
+    # promoted r5 (U1 concat folded into op_set_ops): the
     # incremental-ingest dedup flagship — day-2 batch probes the
     # persisted MinHash band index and min-label CC proves hash
     # equality with the full recompute (VERDICT r4 next #4)
     "dedup_components_incremental",
-    # promoted r5 (op_scalar_micro/op_dates merged): the self-trained
+    # promoted r5 (scalar + date families merged): the self-trained
     # NB classifier — the driver hash-checks the LEARNED model
     # directly (VERDICT r4 next #6), complementing curate_corpus_v7's
     # composed check
@@ -139,7 +132,7 @@ PRIORITY: list[str] = [
     # text side + SRP embedding side) share one union-tagged slot —
     # the r8 simhash merge pattern — seating dedup_embedding_delete
     # (VERDICT r9 next #6) without a new seat; the individual queries
-    # stay registered for the local gate.
+    # stay registered as bench.py headliners.
     "dedup_delete_twins",
     # merged r10: the two calibration/monitor queries share one
     # union-tagged slot (metrics normalized to BIGINT m1-m4), freeing

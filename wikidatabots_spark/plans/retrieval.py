@@ -1035,14 +1035,12 @@ FROM ({_band_sweep_oracle()})
 
 @register("dq_monitor_suite", oracle=_monitor_suite_oracle())
 def dq_monitor_suite_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-window slot carrying BOTH operational monitors (the
-    merged-slot pattern, freeing a seat for the streamed dedup-graph
-    query): the join-key skew diagnosis (``dq_key_skew``) and the LSH
-    banding S-curve (``dedup_band_sweep``), union-tagged by ``leg``
-    with each monitor's four metrics normalized to BIGINT columns
-    m1-m4 (skew: rows / keys / hottest-key rows / skew-milli; sweep:
-    rows-per-band / candidates / verified near-dups / precision-ppm).
-    The individual queries stay registered for the local gate."""
+    """Both operational monitors in one frame: the join-key skew
+    diagnosis (``quality.dq_key_skew_q``) and the LSH banding S-curve
+    (``dedup_band_sweep``), union-tagged by ``leg`` with each monitor's
+    four metrics normalized to BIGINT columns m1-m4 (skew: rows / keys /
+    hottest-key rows / skew-milli; sweep: rows-per-band / candidates /
+    verified near-dups / precision-ppm)."""
     from wikidatabots_spark.plans.quality import dq_key_skew_q
 
     skew = dq_key_skew_q(spark, sf_dir).select(
