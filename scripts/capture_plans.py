@@ -3,6 +3,10 @@
 Usage: python scripts/capture_plans.py <suffix> <query> [query ...]
 Writes plans/r15/<query>_<suffix>.txt for each query.
 
+Spark's global ``plan_id=N`` counters are masked to ``plan_id=#``: they
+count every plan the session has built, so a query that runs jobs while
+its frame is built would otherwise differ from one capture to the next.
+
 Note: for queries that execute work at build time (the streaming
 queries run their staged pipelines inside fn()), the captured plan is
 the SERVED frame's plan; the build-time pipeline is documented in
@@ -12,12 +16,29 @@ OPTIMIZATION_r15.md instead.
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from wikidatabots_spark import plans  # noqa: E402
 from wikidatabots_spark.session import get_spark  # noqa: E402
+
+
+_PLAN_ID = re.compile(r"\bplan_id=\d+")
+
+
+def mask_plan_ids(txt: str) -> str:
+    """Replace each ``plan_id=N`` with ``plan_id=#``."""
+    return _PLAN_ID.sub("plan_id=#", txt)
+
+
+def formatted_plan(spark, df) -> str:
+    """``df.explain("formatted")`` as text, plan ids masked."""
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+        "formatted"
+    )
+    return mask_plan_ids(df._jdf.queryExecution().explainString(mode))
 
 
 def main() -> None:
@@ -34,11 +55,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:
         df = plans.REGISTRY[name].fn(spark, sf_dir)
-        txt = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
+        txt = formatted_plan(spark, df)
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
             f.write(txt)

@@ -3,16 +3,18 @@
 Runs every registered query at the given SF dir in Spark AND its DuckDB
 oracle, compares row count, column names, and an order-insensitive value
 multiset. Usage: python scripts/check_oracle.py [sf_dir] [query ...]
+Exits 2, before the session starts, if a named query is not registered.
 """
 
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from wikidatabots_spark import plans
 from wikidatabots_spark.session import get_spark
@@ -107,6 +109,12 @@ def canon(v):
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    unknown = sorted(only - plans.REGISTRY.keys())
+    if unknown:
+        # a name that is not registered would otherwise be skipped, and
+        # a sweep of only such names would pass having checked nothing
+        print(f"unknown query names: {', '.join(unknown)}", file=sys.stderr)
+        return 2
     spark = get_spark()
     con = duckdb.connect()
     for t in TABLES:

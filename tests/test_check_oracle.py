@@ -1,15 +1,17 @@
-"""Unit tests for the probabilistic-mismatch waiver in
-scripts/check_oracle.py (ADVICE r12: the waiver must be bounded —
+"""Unit tests for scripts/check_oracle.py: the unknown-name exit, and
+the probabilistic-mismatch waiver (ADVICE r12: the waiver must be bounded —
 require actual duck-only misses, cap their count, and diagnose a
 multiplicity bug instead of vacuously waiving it)."""
 
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo/scripts")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "scripts"))
 
-from check_oracle import _MAX_WAIVED_MISSES, diagnose_probabilistic
+import check_oracle  # noqa: E402
+from check_oracle import _MAX_WAIVED_MISSES, diagnose_probabilistic  # noqa: E402
 
 NAME = "dedup_minhash_ml"
 COLS = ["doc_id_a", "doc_id_b", "jaccard"]
@@ -99,3 +101,20 @@ def test_rejects_schema_mismatch():
     )
     assert not waived
     assert "schema" in reason
+
+
+def test_unknown_query_names_exit_before_the_session(monkeypatch, capsys):
+    """Names that are not registered fail the run, each named, before a
+    session starts; skipped silently, a sweep of them passed vacuously."""
+
+    def no_session():
+        raise AssertionError("the session must not start")
+
+    monkeypatch.setattr(check_oracle, "get_spark", no_session)
+    argv = ["check_oracle.py", "unused_sf_dir", "opencritic_main", "no_such_q", "nope_2"]
+    monkeypatch.setattr(sys, "argv", argv)
+    rc = check_oracle.main()
+    assert rc != 0
+    err = capsys.readouterr().err
+    assert "no_such_q" in err and "nope_2" in err
+    assert "opencritic_main" not in err

@@ -239,3 +239,24 @@ def test_driver_window_is_pandas_canonicalizable(spark, sf_dir):
     # TypeError still propagates from its future via pool.map
     with ThreadPoolExecutor(max_workers=8) as pool:
         list(pool.map(canonicalize, PRIORITY))
+
+
+def test_opencritic_main_joins_once(spark, sf_dir):
+    """``opencritic_main`` scans, shuffles and windows ``lineitem`` once
+    and broadcasts ``part`` once, and its rows equal the union of the two
+    flows it replaced."""
+    import re
+    from collections import Counter
+
+    df = plans.REGISTRY["opencritic_main"].fn(spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"FileScan parquet .*lineitem\.parquet", plan)) == 1
+    assert len(re.findall(r"Exchange hashpartitioning\(item#\d+", plan)) == 1
+    assert len(re.findall(r"FileScan parquet .*part\.parquet", plan)) == 1
+    assert plan.count("BroadcastExchange") == 1
+    union = plans.REGISTRY["opencritic_add"].fn(spark, sf_dir).unionByName(
+        plans.REGISTRY["opencritic_update"].fn(spark, sf_dir)
+    )
+    got = Counter(r.rdf_statement for r in df.collect())
+    want = Counter(r.rdf_statement for r in union.collect())
+    assert got == want and sum(want.values()) > 0

@@ -1,10 +1,15 @@
 """Session factory: memory and top-k settings that keep one query from
-killing the shared JVM."""
+killing the shared JVM, and the call-site capture that stays off."""
 
 from __future__ import annotations
 
+import threading
+
+import pytest
+from pyspark.errors.utils import is_debugging_enabled
 from pyspark.sql import functions as F
 
+from wikidatabots_spark import plans
 from wikidatabots_spark.session import TOPK_SORT_FALLBACK, default_driver_memory
 
 
@@ -59,3 +64,34 @@ def test_jvm_death_fails_one_test_and_the_next_gets_a_fresh_session(
     result = pytester.runpytest_subprocess("-p", "no:cacheprovider")
     result.assert_outcomes(failed=1, passed=1)
     result.stdout.fnmatch_lines(["*JVM died during test_halt.py::test_halts_the_jvm*"])
+
+
+def test_call_site_capture_is_off(spark):
+    """PySpark 4 would capture the Python call site of every DataFrame
+    and functions call, at several py4j round trips each."""
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert is_debugging_enabled() is False
+
+
+# The budgets are the counts measured at sf0.001 plus about 10%:
+# tmdb_main 801-811 and opencritic_main 495-499 round trips. With the
+# call-site capture on and the OpenCritic main as a union of two joins,
+# they were 1,911-1,921 and 2,811-2,815.
+@pytest.mark.parametrize("name, budget", [("tmdb_main", 900), ("opencritic_main", 550)])
+def test_main_frame_build_py4j_budget(spark, sf_dir, monkeypatch, name, budget):
+    """Building a reconcile main's frame stays within its py4j budget.
+    Only the building thread's round trips count: py4j's finalizer
+    thread releases collected JVM objects whenever it gets to them."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    me = threading.get_ident()
+    calls = [0]
+
+    def counted(*args, **kwargs):
+        calls[0] += threading.get_ident() == me
+        return send(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counted)
+    plans.REGISTRY[name].fn(spark, sf_dir)
+    monkeypatch.undo()
+    assert calls[0] <= budget, f"{name}: {calls[0]} py4j round trips > {budget}"

@@ -111,8 +111,10 @@ def prefix_columns(df: DataFrame, prefix: str) -> DataFrame:
 
     Polars ``pl.all().name.prefix("wd_")`` (wd_opencritic.py:96,138,180).
     Pure projection — no shuffle, pruning still works through aliases.
+    One ``toDF`` call plans the same Project as a ``col().alias()`` per
+    column, without a py4j round trip per column.
     """
-    return df.select([F.col(c).alias(prefix + c) for c in df.columns])
+    return df.toDF(*[prefix + c for c in df.columns])
 
 
 def now_lit() -> Column:

@@ -11,9 +11,12 @@ opencritic main does the same with 2 (wd_opencritic.py:216-222). Here:
 - ``run_tmdb_main``: plan → ``print_rdf_statements`` sink, the exact
   reference execution path (concat → guard → collect → print).
 
-The union is ``unionByName`` over identically-shaped one-column frames —
-Catalyst plans it as a single multi-child Union stage; each child keeps
-its own pushed filters. The sink's count guard fences the union with a
+The TMDB union is ``unionByName`` over identically-shaped one-column
+frames — Catalyst plans it as a single multi-child Union stage; each
+child keeps its own pushed filters. The OpenCritic flows share one join,
+so their main builds it once and renders each row by the flow whose
+condition holds, instead of a union that would scan, shuffle and window
+``lineitem`` once per flow. The sink's count guard fences the frame with a
 local checkpoint, so the plan is evaluated once and the guard's count and
 the printed rows come from that one evaluation (the reference likewise
 counts the frame it has collected, SURVEY §2.6 O4).
@@ -26,6 +29,7 @@ import sys
 from typing import IO
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from wikidatabots_spark.plans import opencritic as oc
 from wikidatabots_spark.plans import tmdb
@@ -33,7 +37,6 @@ from wikidatabots_spark.plans.registry import register
 from wikidatabots_spark.sinks.rdf import print_rdf_statements
 
 _TMDB_PARTS = ["tmdb_via_imdb", "tmdb_via_tvdb", "tmdb_not_found"]
-_OC_PARTS = ["opencritic_add", "opencritic_update"]
 
 
 def _union_of(names: list[str], spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -63,8 +66,21 @@ def tmdb_main_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=_union_oracle([oc._OPENCRITIC_ADD_ORACLE, oc._OPENCRITIC_UPDATE_ORACLE]),
 )
 def opencritic_main_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Both OpenCritic flows as one combined plan."""
-    return _union_of(_OC_PARTS, spark, sf_dir)
+    """Both OpenCritic flows as one combined plan: the rows of
+    ``opencritic_add`` union ``opencritic_update``, over one join. The
+    two conditions are exclusive (statement null vs not null), so each
+    kept row renders by the one that holds."""
+    wd, api = oc._wd_fixture(spark, sf_dir), oc._api_fixture(spark, sf_dir)
+    add = oc.add_condition()
+    return (
+        oc.opencritic_joined(wd, api)
+        .where(add | oc.update_condition())
+        .select(
+            F.when(add, oc.add_statement())
+            .otherwise(oc.update_statement())
+            .alias("rdf_statement")
+        )
+    )
 
 
 def run_tmdb_main(

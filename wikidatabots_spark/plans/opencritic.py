@@ -13,6 +13,11 @@ key coalescing (:141-147); then two sibling flows:
   values actually changed beyond thresholds → render an update template
   via when/then/otherwise.
 
+Each flow is a condition and a rendered statement (``add_condition`` /
+``add_statement``, ``update_condition`` / ``update_statement``), shared by
+the two registered flows and by ``plans.mains.opencritic_main_frame``,
+which renders both over one join.
+
 Scale notes: both filters are pure Column predicates evaluated post-join;
 Catalyst pushes the single-side conjuncts (statement null-ness, api score
 null-ness) below the join into the scans. The api side is a dimension
@@ -21,7 +26,7 @@ table → broadcast-joinable; AQE does this automatically at runtime size.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from wikidatabots_spark.functions.core import pl_format, prefix_columns, unique_keep_none
@@ -58,48 +63,57 @@ def opencritic_joined(wd: DataFrame, api: DataFrame) -> DataFrame:
     ).drop("api_id")
 
 
-def opencritic_add(wd: DataFrame, api: DataFrame) -> DataFrame:
-    """Add-score flow (wd_opencritic.py:148-159)."""
-    j = opencritic_joined(wd, api)
-    eligible = j.where(
+def _score() -> Column:
+    return F.round(F.col("api_top_critic_score"), 0).cast("int")
+
+
+def _day() -> Column:
+    return F.date_format(F.to_date(F.col("api_retrieved_at")), "yyyy-MM-dd")
+
+
+def add_condition() -> Column:
+    """Rows of the add-score flow (wd_opencritic.py:148-159): no existing
+    statement, an api score, enough reviews."""
+    return (
         F.col("wd_statement").isNull()
         & F.col("api_top_critic_score").isNotNull()
         & (F.col("api_num_reviews") > F.lit(NUM_REVIEWS_THRESHOLD))
     )
-    score = F.round(F.col("api_top_critic_score"), 0).cast("int")
-    day = F.date_format(F.to_date(F.col("api_retrieved_at")), "yyyy-MM-dd")
-    return eligible.select(
-        pl_format(
-            'wd:{} p:P8865 [ ps:P8865 {} ; pq:P585 "{}" ] .',
-            F.col("wd_qid"),
-            score,
-            day,
-        ).alias("rdf_statement")
+
+
+def add_statement() -> Column:
+    return pl_format(
+        'wd:{} p:P8865 [ ps:P8865 {} ; pq:P585 "{}" ] .',
+        F.col("wd_qid"),
+        _score(),
+        _day(),
     )
 
 
-def opencritic_update(wd: DataFrame, api: DataFrame) -> DataFrame:
-    """Update-score flow with change detection (wd_opencritic.py:161-211).
-
-    Emit only when the rounded api score differs from the recorded one, or
-    the review count grew beyond the threshold (+10 hysteresis,
-    wd_opencritic.py:164-167, ``_NUM_REVIEWS_THRESHOLD`` :7).
-    """
-    j = opencritic_joined(wd, api)
-    new_score = F.round(F.col("api_top_critic_score"), 0).cast("int")
+def update_condition() -> Column:
+    """Rows of the update-score flow with change detection
+    (wd_opencritic.py:161-211): a statement exists, and the rounded api
+    score differs from the recorded one or the review count grew beyond
+    the threshold (+10 hysteresis, wd_opencritic.py:164-167,
+    ``_NUM_REVIEWS_THRESHOLD`` :7)."""
+    new_score = _score()
     changed = (new_score != F.col("wd_review_score")) | (
         F.col("api_num_reviews") > (F.col("wd_number_of_reviews") + F.lit(10))
     )
-    eligible = j.where(
+    return (
         F.col("wd_statement").isNotNull()
         & F.col("api_top_critic_score").isNotNull()
         & F.col("wd_review_score").isNotNull()
         & (F.col("api_num_reviews") > F.lit(NUM_REVIEWS_THRESHOLD))
         & changed
     )
-    day = F.date_format(F.to_date(F.col("api_retrieved_at")), "yyyy-MM-dd")
-    # add-vs-update conditional template (wd_opencritic.py:100-128)
-    rendered = F.when(
+
+
+def update_statement() -> Column:
+    """The raise-vs-lower conditional template (wd_opencritic.py:100-128)."""
+    new_score = _score()
+    day = _day()
+    return F.when(
         new_score > F.col("wd_review_score"),
         pl_format(
             'wds:{} ps:P8865 {} ; pq:P585 "{}" . # raise',
@@ -115,7 +129,24 @@ def opencritic_update(wd: DataFrame, api: DataFrame) -> DataFrame:
             day,
         )
     )
-    return eligible.select(rendered.alias("rdf_statement"))
+
+
+def opencritic_add(wd: DataFrame, api: DataFrame) -> DataFrame:
+    """Add-score flow (wd_opencritic.py:148-159)."""
+    return (
+        opencritic_joined(wd, api)
+        .where(add_condition())
+        .select(add_statement().alias("rdf_statement"))
+    )
+
+
+def opencritic_update(wd: DataFrame, api: DataFrame) -> DataFrame:
+    """Update-score flow (wd_opencritic.py:161-211)."""
+    return (
+        opencritic_joined(wd, api)
+        .where(update_condition())
+        .select(update_statement().alias("rdf_statement"))
+    )
 
 
 # ---------------------------------------------------------------------------

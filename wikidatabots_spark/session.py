@@ -110,6 +110,19 @@ def get_spark(
         .config(
             "spark.sql.execution.topKSortFallbackThreshold", str(TOPK_SORT_FALLBACK)
         )
+        # PySpark 4 captures the Python call site of every DataFrame and
+        # functions call (pyspark/errors/utils.py:_with_origin): an active
+        # session lookup, a conf read, an origin set and clear over py4j
+        # and a stack walk, per call. Spark documents the capture as
+        # having non-trivial overhead. Off, errors keep their Python
+        # traceback and the Catalyst context. Measured with this setting
+        # alone on a 4-core VM, building both reconcile mains: 5.6-6.3k
+        # py4j round trips fell to 2.0-2.6k, Python-side build time
+        # 0.85-0.94 -> 0.49-0.63 s (TMDB) and 0.75-0.78 -> 0.29-0.36 s
+        # (OpenCritic), driver CPU per benchmark iteration 0.68 ->
+        # 0.18-0.35 s and py4j-thread JVM CPU 1.3-1.4 -> 0.8-1.2 s. A
+        # static conf: it must be set here, before the session exists.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # This host exhibits guest-invisible multi-minute stalls (the
         # bench protocol documents 1.4s ↔ 17s swings at idle loadavg;
         # r12 captured a 245s full-JVM freeze in a -s pytest log). At
