@@ -39,10 +39,21 @@ Measurement protocol (VERDICT r5 next #3):
 - Output file: $SPARK_GRAFT_BENCH_OUT (default BENCH_driver_latest.json,
   which is .gitignored) — driver runs can never alias the committed
   clean record BENCH_local_latest.json (VERDICT r5 next #8).
+
+Two flags narrow or deepen a run; a bare ``python bench.py`` is the
+protocol above:
+
+- ``--only q1 q2 ...`` times the named registered queries instead of
+  the headliners, under the same protocol, output file and stdout line.
+- ``--stages`` prints, after every timed run, each Spark stage the run
+  completed: its wall time, its executor CPU (JVM only: Python-worker
+  CPU is in the per-run engine CPU, not per stage) and its task count,
+  to stderr.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import re
@@ -348,7 +359,64 @@ def _engine_cpu_seconds(seen: set[tuple[int, int]]) -> float:
     return sum(stats[pid][2] for pid in live) / tick
 
 
+def _parse_args(argv: list[str] | None = None) -> argparse.Namespace:
+    ap = argparse.ArgumentParser(description="Time the headline queries.")
+    ap.add_argument(
+        "--only",
+        nargs="+",
+        metavar="QUERY",
+        help="time these registered queries instead of the headliners",
+    )
+    ap.add_argument(
+        "--stages",
+        action="store_true",
+        help="print each timed run's stages: wall, JVM CPU, tasks (stderr)",
+    )
+    args = ap.parse_args(argv)
+    unknown = [q for q in args.only or () if q not in plans.REGISTRY]
+    if unknown:
+        ap.error("not registered: " + " ".join(unknown))
+    return args
+
+
+def _stages_after(sc, after: float) -> tuple[int, list[tuple]]:
+    """The newest stage id in the status store, and (id, wall s,
+    executor CPU s, tasks, name) of each completed stage with an id
+    above ``after``. The store lists stages newest first, so the walk
+    stops at ``after``."""
+    gw = sc._gateway
+    # Spark 4: stageList(statuses, withDetails, withSummaries,
+    # unsortedQuantiles, taskStatus)
+    lst = sc._jsc.sc().statusStore().stageList(
+        gw.jvm.java.util.ArrayList(),
+        False,
+        False,
+        gw.new_array(gw.jvm.double, 0),
+        gw.jvm.java.util.ArrayList(),
+    )
+    newest = lst.apply(0).stageId() if lst.size() else -1
+    out = []
+    for i in range(lst.size()):
+        st = lst.apply(i)
+        if st.stageId() <= after:
+            break
+        sub, comp = st.submissionTime(), st.completionTime()
+        if sub.isDefined() and comp.isDefined():
+            out.append(
+                (
+                    st.stageId(),
+                    (comp.get().getTime() - sub.get().getTime()) / 1000.0,
+                    st.executorCpuTime() / 1e9,
+                    st.numCompleteTasks(),
+                    str(st.name()),
+                )
+            )
+    return newest, sorted(out)
+
+
 def main() -> None:
+    args = _parse_args()
+    names = args.only or HEADLINERS
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
@@ -374,18 +442,20 @@ def main() -> None:
             plans.REGISTRY[warm_q].fn(spark, warm_dir).count()
 
     # light queries first, heavy shuffle-tail pipelines last, every pass
-    order = [n for n in HEADLINERS if n not in HEAVY_LAST] + [
-        n for n in HEADLINERS if n in HEAVY_LAST
+    order = [n for n in names if n not in HEAVY_LAST] + [
+        n for n in names if n in HEAVY_LAST
     ]
     bar_order = [n for n in order if n in BAR_QUERIES]
-    passes: dict[str, list[float]] = {name: [] for name in HEADLINERS}
-    loadavg: dict[str, list[float]] = {name: [] for name in HEADLINERS}
-    cpu_passes: dict[str, list[float]] = {name: [] for name in HEADLINERS}
+    passes: dict[str, list[float]] = {name: [] for name in names}
+    loadavg: dict[str, list[float]] = {name: [] for name in names}
+    cpu_passes: dict[str, list[float]] = {name: [] for name in names}
     rows: dict[str, int] = {}
     engine_procs: set[tuple[int, int]] = set()
 
     def run_one(name: str) -> None:
         fn = plans.REGISTRY[name].fn
+        if args.stages:
+            last = _stages_after(spark.sparkContext, float("inf"))[0]
         # CPU counters read strictly OUTSIDE the timed window (before t0 /
         # after the wall measurement) — the wall timing is unchanged
         c0 = _engine_cpu_seconds(engine_procs)
@@ -395,6 +465,20 @@ def main() -> None:
         c1 = _engine_cpu_seconds(engine_procs)
         cpu_passes[name].append(round(max(0.0, c1 - c0), 3))
         loadavg[name].append(round(os.getloadavg()[0], 2))
+        if args.stages:
+            print(
+                f"# {name}: {passes[name][-1]:.3f}s, engine CPU "
+                f"{cpu_passes[name][-1]:.2f}s",
+                file=sys.stderr,
+            )
+            for sid, wall, cpu, tasks, sname in _stages_after(
+                spark.sparkContext, last
+            )[1]:
+                print(
+                    f"#   stage {sid}: {wall:.3f}s wall, {cpu:.2f}s JVM CPU, "
+                    f"{tasks} tasks  {sname[:80]}",
+                    file=sys.stderr,
+                )
 
     # DEDICATED FIRST BLOCK (VERDICT r6 next #3 / r7 next #5): the
     # bar-carrying queries measure FIRST — JVM warm from the sf0.001
@@ -432,7 +516,7 @@ def main() -> None:
         for name in order:
             run_one(name)
     timings = {name: min(ts) for name, ts in passes.items()}
-    for name in HEADLINERS:
+    for name in names:
         all_ts = " ".join(f"{t:.3f}" for t in passes[name])
         print(
             f"# {name}: {timings[name]:.3f}s ({rows[name]} rows) "

@@ -3,9 +3,14 @@
 Usage: python scripts/capture_plans.py <suffix> <query> [query ...]
 Writes plans/r15/<query>_<suffix>.txt for each query.
 
-Spark's global ``plan_id=N`` counters are masked to ``plan_id=#``: they
-count every plan the session has built, so a query that runs jobs while
-its frame is built would otherwise differ from one capture to the next.
+Spark's global counters are masked: ``plan_id=N`` to ``plan_id=#`` and
+RDD ids (``MapPartitionsRDD[N]``) to ``RDD[#]``. They count every plan
+and RDD the session has built, so a query that runs jobs while its frame
+is built would otherwise differ from one capture to the next. Expression
+ids (``name#N``) and PySpark lambda variables (``x_N``) count every one
+the process has built, so they are renumbered by first appearance within
+each dump: a dump does not shift when a query captured before it in the
+same process changes.
 
 Note: for queries that execute work at build time (the streaming
 queries run their staged pipelines inside fn()), the captured plan is
@@ -26,19 +31,35 @@ from wikidatabots_spark.session import get_spark  # noqa: E402
 
 
 _PLAN_ID = re.compile(r"\bplan_id=\d+")
+_RDD_ID = re.compile(r"RDD\[\d+\]")
+# (pattern, prefix) of each per-process counter renumbered per dump
+_RENUMBERED = ((re.compile(r"#(\d+)"), "#"), (re.compile(r"\bx_(\d+)\b"), "x_"))
 
 
 def mask_plan_ids(txt: str) -> str:
-    """Replace each ``plan_id=N`` with ``plan_id=#``."""
-    return _PLAN_ID.sub("plan_id=#", txt)
+    """Replace each ``plan_id=N`` with ``plan_id=#`` and each RDD id
+    ``RDD[N]`` with ``RDD[#]``."""
+    return _RDD_ID.sub("RDD[#]", _PLAN_ID.sub("plan_id=#", txt))
+
+
+def renumber_expr_ids(txt: str) -> str:
+    """Renumber each ``#N`` expression id and each ``x_N`` lambda
+    variable by its first appearance in ``txt``: the first id seen
+    becomes ``#0``, the next new one ``#1``, and likewise ``x_0``."""
+    for pattern, prefix in _RENUMBERED:
+        ids: dict[str, str] = {}
+        txt = pattern.sub(lambda m: prefix + ids.setdefault(m[1], str(len(ids))), txt)
+    return txt
 
 
 def formatted_plan(spark, df) -> str:
-    """``df.explain("formatted")`` as text, plan ids masked."""
+    """``df.explain("formatted")`` as text, plan ids masked and expression
+    ids renumbered."""
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
     )
-    return mask_plan_ids(df._jdf.queryExecution().explainString(mode))
+    txt = df._jdf.queryExecution().explainString(mode)
+    return renumber_expr_ids(mask_plan_ids(txt))
 
 
 def main() -> None:

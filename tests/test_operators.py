@@ -984,12 +984,25 @@ def test_words_col_sharing_matches_private_split(spark):
         assert got == want
 
 
+# non-ASCII texts for the text parity tests: JVM toLowerCase vs Python
+# str.lower, and Java \s (ASCII whitespace only) vs the MinHash kernel's
+# explicit split class
+_NON_ASCII_ROWS = [
+    (910, "Café Crème brûlée CAFÉ crème Brûlée"),
+    (911, "Straße STRASSE straße Maß"),
+    (912, "İstanbul IŞIK ılık İSTANBUL ışık"),
+    (913, "ΟΔΥΣΣΕΥΣ ΚΑΙ ΣΟΦΟΣ ΛΟΓΟΣ σοφος λογος"),  # word-final Σ
+    (914, "one\u00a0two three\u2028four five\u0085six seven"),
+    (915, "ＡＢＣ ｆｕｌｌ ＷＩＤＴＨ ǅemal ǄEMAL ẞig ẞ"),
+]
+
+
 def test_winnow_kernel_matches_expression_form(spark):
-    """The r14 mapInArrow winnowing kernel emits the SAME (id, fp) set
-    as the JVM expression form it replaced — split/lower/shingle/md5/
-    window-min/distinct semantics replicated exactly, including the
-    short-document guards (< k words, < window shingles) and repeated
-    shingles."""
+    """winnow_fingerprints emits the SAME (id, fp) set as the expression
+    form the r14-r15 mapInArrow kernel was pinned against —
+    split/lower/shingle/md5/window-min/distinct semantics, including the
+    short-document guards (< k words, < window shingles), repeated
+    shingles and non-ASCII text."""
     import random
 
     from wikidatabots_spark.operators.dedup import winnow_fingerprints
@@ -1006,7 +1019,7 @@ def test_winnow_kernel_matches_expression_form(spark):
         (902, "one two three four five six"),  # exactly enough
         (903, "dup dup dup dup dup dup dup dup"),  # one distinct fp
         (904, "  leading   and\ttrailing  spaces\n"),
-    ]
+    ] + _NON_ASCII_ROWS
     df = spark.createDataFrame(rows, "doc_id long, text string")
     for kk, ww in ((3, 4), (2, 2)):
         got = {
@@ -1066,15 +1079,7 @@ def test_minhash_kernel_matches_expression_form(spark):
         (903, "dup dup dup dup dup dup dup dup"),  # one distinct shingle
         (904, "  leading   and\ttrailing  spaces\n"),
         (905, None),  # NULL text
-        # non-ASCII: JVM toLowerCase vs Python str.lower, and Java \s
-        # (ASCII whitespace only) vs the kernel's explicit class
-        (910, "Café Crème brûlée CAFÉ crème Brûlée"),
-        (911, "Straße STRASSE straße Maß"),
-        (912, "İstanbul IŞIK ılık İSTANBUL ışık"),
-        (913, "ΟΔΥΣΣΕΥΣ ΚΑΙ ΣΟΦΟΣ ΛΟΓΟΣ σοφος λογος"),  # word-final Σ
-        (914, "one\u00a0two three\u2028four five\u0085six seven"),
-        (915, "ＡＢＣ ｆｕｌｌ ＷＩＤＴＨ ǅemal ǄEMAL ẞig ẞ"),
-    ]
+    ] + _NON_ASCII_ROWS
     df = spark.createDataFrame(rows, "doc_id long, text string")
     for k, n in ((8, 3), (4, 2)):
         got = {
@@ -1113,6 +1118,20 @@ def test_minhash_kernel_matches_expression_form(spark):
             ).collect()
         }
         assert got == want and len(got) > 100
+
+
+def test_memo_keeps_at_most_cap_entries_and_computes_past_it():
+    """The kernels' per-task memo: a miss calls the function once and is
+    kept while there is room; past the cap every value is still
+    computed, none kept."""
+    from wikidatabots_spark.operators.kernels import Memo
+
+    calls = []
+    memo = Memo(lambda k: calls.append(k) or k.upper(), cap=2)
+    assert [memo[k] for k in "abcab"] == list("ABCAB")
+    assert dict(memo) == {"a": "A", "b": "B"}
+    assert calls == ["a", "b", "c"]
+    assert memo["c"] == "C" and calls == ["a", "b", "c", "c"]
 
 
 def test_curate_dedup_plans_compute_once(spark, sf_dir):
@@ -1633,19 +1652,16 @@ def _gate_edge_rows():
         (907, "srcX", "a b a b a b a b"),  # repeated bigrams
         (908, "srcX", None),  # NULL text
         (909, "srcX", "der die und das ist der die und"),
-    ]
+    ] + [(i, "srcX", text) for i, text in _NON_ASCII_ROWS]
 
 
-def test_token_bucket_kernel_matches_expression_form(spark, monkeypatch):
-    """The r14 token-bucket mapInArrow kernel (bucket_occurrences /
-    dsir_occurrences) emits EXACTLY the rows of the explode +
-    _token_bucket + groupBy expression form it replaced — md5 is
-    engine-independent, so the bucket ids are identical integers, not
-    a collision tradeoff; NULL and token-free texts emit no rows in
-    both forms. Past the token memo's cap the rows are the same."""
+def test_token_bucket_kernel_matches_expression_form(spark):
+    """token_bucket_counts (bucket_occurrences / dsir_occurrences) emits
+    EXACTLY the rows of the explode + _token_bucket + groupBy form the
+    r14-r15 mapInArrow kernel was pinned against; NULL and token-free
+    texts emit no rows."""
     import random
 
-    from wikidatabots_spark.operators import textstats
     from wikidatabots_spark.operators.textstats import (
         _token_bucket,
         bucket_occurrences,
@@ -1697,27 +1713,17 @@ def test_token_bucket_kernel_matches_expression_form(spark, monkeypatch):
     }
     assert got_s == want_s
 
-    # a memo cap below the vocabulary size: the kernel (pickled with the
-    # patched cap when the frame is built) hashes past it
-    monkeypatch.setattr(textstats, "MEMO_CAP", 3)
-    assert len({w.lower() for w in vocab}) > textstats.MEMO_CAP
-    assert {tuple(r) for r in bucket_occurrences(df).collect()} == want
 
-
-def test_lm_bigram_kernel_matches_string_reference(spark, monkeypatch):
-    """with_lm_score over the r14 pre-aggregated bigram kernel equals a
-    string-keyed reference that never hashes: same tokenizer expression
-    form as the old per-occurrence implementation, model and scoring
-    keyed on the bigram STRINGS. Pins (a) the kernel's tokenize/pair
-    semantics against the JVM expression form, (b) the cnt-weighted
-    two-level aggregation against per-occurrence sums, and (c) that the
-    hash keys are an invisible internal detail (collisions aside).
-    Past the word/bigram memo's cap the scores are the same."""
+def test_lm_bigram_kernel_matches_string_reference(spark):
+    """with_lm_score equals a string-keyed reference that never hashes:
+    the same tokenizer expression form, model and scoring keyed on the
+    bigram STRINGS. Pins the tokenize/pair semantics, non-ASCII text
+    included, and that the hash keys are an invisible internal detail
+    (collisions aside)."""
     import random
 
     from pyspark.sql import Window
 
-    from wikidatabots_spark.operators import lm
     from wikidatabots_spark.operators.lm import (
         LM_ALPHA,
         LM_SCALE,
@@ -1730,6 +1736,7 @@ def test_lm_bigram_kernel_matches_string_reference(spark, monkeypatch):
         (i, " ".join(rng.choice(vocab) for _ in range(rng.randint(0, 25))))
         for i in range(150)
     ] + [(900, ""), (901, "one"), (902, "a b a b a b"), (903, None)]
+    rows += _NON_ASCII_ROWS
     df = spark.createDataFrame(rows, "doc_id long, text string")
 
     got = {tuple(r) for r in with_lm_score(df).collect()}
@@ -1781,24 +1788,16 @@ def test_lm_bigram_kernel_matches_string_reference(spark, monkeypatch):
     }
     assert got == want and len(got) == len(rows)
 
-    # a memo cap below the vocabulary size: the kernel (pickled with the
-    # patched cap when the frame is built) hashes past it
-    monkeypatch.setattr(lm, "MEMO_CAP", 3)
-    assert len({w.lower() for w in vocab}) > lm.MEMO_CAP
-    assert {tuple(r) for r in with_lm_score(df).collect()} == want
 
-
-def test_gate_kernel_matches_builder_chain(spark, monkeypatch):
+def test_gate_kernel_matches_builder_chain(spark):
     """gate_feature_counts + gate_features_from_counts reproduce the
     with_quality → with_lang_guess → with_repetition →
     with_classifier_score chain BIT-for-bit on every non-NULL-text row
     (exact double equality — same integers, same expression trees), and
     the NULL-text row both paths drop once the curation gate stack filters
-    run (the kernel omits it; the chain scores it below every gate).
-    Past the word-weight memo's cap the features are the same."""
+    run (the counters omit it; the chain scores it below every gate)."""
     import random
 
-    from wikidatabots_spark.operators import textstats
     from wikidatabots_spark.operators.textstats import (
         _words_sql,
         gate_feature_counts,
@@ -1854,10 +1853,3 @@ def test_gate_kernel_matches_builder_chain(spark, monkeypatch):
     got_g = {r.doc_id for r in fused.where(gates).collect()}
     want_g = {r.doc_id for r in chain.where(gates).collect()}
     assert got_g == want_g
-
-    # a memo cap below the vocabulary size: the kernel (pickled with the
-    # patched cap when the frame is built) hashes past it
-    monkeypatch.setattr(textstats, "MEMO_CAP", 3)
-    assert len(set(vocab)) > textstats.MEMO_CAP
-    capped = gate_features_from_counts(gate_feature_counts(df)).select(*cols)
-    assert {tuple(r) for r in capped.collect()} == want_nonnull

@@ -24,7 +24,7 @@ FAST = [
     "q13_customer_distribution",
     "q21_waiting_supplier",
     "ev_hourly_rollup",
-    "text_fingerprint",
+    "text_profile",
     "tmdb_via_imdb",
     "opencritic_add",
 ]

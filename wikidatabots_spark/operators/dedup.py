@@ -1,9 +1,8 @@
 """Deduplication operators over a document corpus.
 
 Four strategies, DataFrame compositions (JVM-side, codegen'd) except for
-two Python ``mapInArrow`` kernels over (id, text) batches: the MinHash
-signatures (``minhash_signature_cols``) and the winnowing fingerprints
-(``winnow_fingerprints``):
+one Python ``mapInArrow`` kernel (``operators/kernels.py``): the MinHash
+signatures (``minhash_signature_cols``):
 
 - ``dedup_exact``     content-hash groupBy (one shuffle on a 128-bit key)
 - ``minhash_lsh_pairs``  MinHash signatures + banded LSH candidate join
@@ -35,8 +34,12 @@ closest structural relative is its is_unique/keep-none idiom
 
 from __future__ import annotations
 
+import hashlib
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from wikidatabots_spark.operators.kernels import Memo, map_text, split_words
 
 WORD_SPLIT = r"\s+"
 
@@ -306,85 +309,41 @@ def minhash_signature_cols(
     2.22 / 0.88 s vs 2.12 / 0.80 s (a tie); 5,000 docs (sf0.1 size)
     3.09 / 1.45 s vs 4.37 / 1.93 s. The kernel stays.
 
-    The kernel hands whole Arrow batches to C-backed ``hashlib.md5``/str
-    ops. Each distinct shingle of a document is hashed once, through a
-    per-task shingle→raw-digests memo (capped — Zipf repetition makes it
-    pay, the cap bounds a long-lived task's memory; the same policy as
-    the lm.py bigram memo and the textstats token memos); the per-hash
-    minima are taken over raw 16-byte digests and only the k minima are
-    hex-encoded. Exact equivalence with the expression form, pinned by
-    ``test_minhash_kernel_matches_expression_form``: the tokenizer
-    replicates Spark ``split(lower(text), '\\s+')`` (Java ``\\s`` =
-    ``[ \\t\\n\\x0B\\f\\r]``); ``md5(concat('<i>:', t))`` hashes the same
-    UTF-8 bytes; byte order of raw digests equals the order of their
-    lowercase hex strings, which is the JVM's UTF8String binary
-    comparison — so every signature STRING is identical, not a
-    collision tradeoff.
+    Each distinct shingle of a document is hashed once, through a
+    per-task shingle → raw-digests memo; the per-hash minima are taken
+    over raw 16-byte digests and only the k minima are hex-encoded.
+    Byte order of raw digests equals the order of their lowercase hex
+    strings, which is the JVM's UTF8String binary comparison, so every
+    signature STRING equals the expression form's
+    (``test_minhash_kernel_matches_expression_form``), not a collision
+    tradeoff.
     """
-    from collections.abc import Iterator
-
-    import pyarrow as pa
-
     n = shingle_size
-    k = num_hashes
+    prefixes = [f"{i}:".encode() for i in range(num_hashes)]
+
+    def digests(sh: str) -> tuple[bytes, ...]:
+        b = sh.encode()
+        return tuple(hashlib.md5(p + b).digest() for p in prefixes)
+
+    def factory():
+        # capped at 2^18 entries: an entry (a ~20-char shingle key, a
+        # k-tuple of 16-byte digests and its dict slot) measures ~600
+        # bytes at 8 hashes, so ~160 MB at the cap
+        memo = Memo(digests, 1 << 18)
+
+        def doc(s: str) -> list[tuple[str, ...]]:
+            wl = split_words(s)
+            # each distinct shingle once; < shingle_size words: no row
+            shs = set(map(" ".join, zip(*[wl[j:] for j in range(n)])))
+            if not shs:
+                return []
+            hs = [memo[sh] for sh in shs]
+            return [tuple(min(c).hex() for c in zip(*hs))]
+
+        return doc
+
     src = df.select(F.col(id_col), F.col(text_col))
-    id_type = dict(src.dtypes)[id_col]
-
-    def sig_batches(
-        batches: Iterator[pa.RecordBatch],
-    ) -> Iterator[pa.RecordBatch]:
-        import hashlib
-        import re
-
-        ws = re.compile("[ \\t\\n\\x0b\\f\\r]+")  # Java regex \s
-        prefixes = [f"{i}:".encode("utf-8") for i in range(k)]
-        # per-task shingle→k-raw-digest memo, capped at 2^18 entries: an
-        # entry (a ~20-char shingle key, a k-tuple of 16-byte digests and
-        # its dict slot) measures ~600 bytes at 8 hashes, so ~160 MB at
-        # the cap. Shingles repeat across documents (Zipf), so most
-        # lookups hit; past the cap the kernel simply hashes — same
-        # values, bounded memory
-        memo: dict[str, tuple[bytes, ...]] = {}
-        memo_get = memo.get
-
-        def digests(sh: str) -> tuple[bytes, ...]:
-            b = sh.encode("utf-8")
-            v = tuple(hashlib.md5(p + b).digest() for p in prefixes)
-            if len(memo) < (1 << 18):
-                memo[sh] = v
-            return v
-
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            out_ids: list = []
-            out_cols: list[list[str]] = [[] for _ in range(k)]
-            for i, s in zip(ids, texts):
-                if i is None or s is None:
-                    continue
-                wl = [w for w in ws.split(s.lower()) if w]
-                # each distinct shingle once; < shingle_size words: no
-                # shingles, no row
-                shs = set(map(" ".join, zip(*[wl[j:] for j in range(n)])))
-                if not shs:
-                    continue
-                out_ids.append(i)
-                hs = [memo_get(sh) or digests(sh) for sh in shs]
-                for t, col in enumerate(zip(*hs)):
-                    out_cols[t].append(min(col).hex())
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_ids, type=batch.schema.field(0).type),
-                    *[pa.array(c, type=pa.string()) for c in out_cols],
-                ],
-                names=[id_col, *[f"mh{t}" for t in range(k)]],
-            )
-
-    sig = src.mapInArrow(
-        sig_batches,
-        f"{id_col} {id_type} NOT NULL, "
-        + ", ".join(f"mh{t} string" for t in range(k)),
-    )
+    sig = map_text(src, {f"mh{t}": "string" for t in range(num_hashes)}, factory)
     if _under_partitioned(src):
         target = df.sparkSession.sparkContext.defaultParallelism
         return sig.repartition(target, F.col(id_col))
@@ -921,76 +880,44 @@ def winnow_fingerprints(
     only ~2/(window+1) of positions are kept — a tunable density/recall
     dial that whole-document hashing cannot offer.
 
-    Plan shape: ONE narrow map, zero shuffles — since r14 a
-    ``mapInArrow`` kernel (guide §4.2): the shingle build + per-shingle
-    md5 + sliding window-min ran as interpreted higher-order functions
-    (no codegen inside HOF lambdas), measured ~13 s of executor CPU at
-    sf0.1 — the single largest CPU stage of every curate flagship; the
-    kernel hands whole Arrow batches to C-backed ``hashlib``/str ops,
-    ~10x the per-shingle throughput, and emits the per-doc distinct
-    fingerprint set directly. (id, fp) rows stay distinct-per-doc, so
-    no sort window or global distinct is needed downstream. Hashes are
-    md5 hex strings — engine-agnostic, oracle-reproducible
+    Plan shape: ONE narrow map, zero shuffles past the
+    ``ensure_parallelism`` guard — split → shingle → md5 → sliding
+    window-min → per-doc ``array_distinct`` → explode. (id, fp) rows
+    stay distinct-per-doc, so no global distinct is needed downstream.
+    Hashes are md5 hex strings — engine-agnostic, oracle-reproducible
     (lexicographic min on hex strings in all three implementations).
 
-    Exact-equivalence notes vs the former expression form, pinned by
-    ``test_winnow_kernel_matches_expression_form``: the tokenizer
-    replicates Spark ``split(lower(text), '\\s+')`` — the split class
-    is Java regex ``\\s`` = ``[ \\t\\n\\x0B\\f\\r]`` (ASCII, unlike
-    Python's Unicode ``\\s``); ``str.lower()`` and JVM lowercasing
-    agree on ASCII (every corpus here) and on all but a handful of
-    exotic Unicode case mappings; md5-of-UTF-8 and lexicographic min
-    on hex digests are engine-independent.
+    From r14 to r15 this was a ``mapInArrow`` kernel; it was deleted
+    because it loses to this form on total engine CPU (JVM plus Python
+    workers). Same-window A/B over the documents table, k=3, window=4,
+    4-core VM, 10 alternating pairs, medians (quartiles), CPU / wall:
+    500 docs, kernel 1.65 (1.62-1.72) / 0.57 s vs this form 0.42
+    (0.40-0.55) / 0.31 s; 5,000 docs, kernel 2.38 (2.31-2.50) / 0.77 s
+    vs this form 1.50 (1.44-1.57) / 0.62 s — this form cheaper in
+    10/10 pairs and faster in 9/10. Rows equal the kernel's
+    (``test_winnow_kernel_matches_expression_form``).
     """
-    from collections.abc import Iterator
-
-    import pyarrow as pa
-
-    src = ensure_parallelism(
-        df.select(F.col(id_col), F.col(text_col)), id_col
+    wl = f"filter(split(lower(`{text_col}`), '\\\\s+'), w -> w != '')"
+    elems = ", ".join(f"element_at(__wl, i + {j})" for j in range(k))
+    shingles_sql = (
+        f"CASE WHEN size(__wl) >= {k}"
+        f" THEN transform(sequence(1, size(__wl) - {k - 1}),"
+        f" i -> md5(concat_ws(' ', {elems})))"
+        f" ELSE CAST(array() AS array<string>) END"
     )
-
-    def fp_batches(
-        batches: Iterator[pa.RecordBatch],
-    ) -> Iterator[pa.RecordBatch]:
-        import hashlib
-        import re
-
-        ws = re.compile("[ \\t\\n\\x0b\\f\\r]+")  # Java regex \s
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            out_ids: list[int] = []
-            out_fps: list[str] = []
-            for i, s in zip(ids, texts):
-                if s is None:
-                    continue
-                wl = [w for w in ws.split(s.lower()) if w != ""]
-                n_sh = len(wl) - (k - 1)
-                if n_sh < window:
-                    continue
-                hs = [
-                    hashlib.md5(
-                        " ".join(wl[j : j + k]).encode("utf-8")
-                    ).hexdigest()
-                    for j in range(n_sh)
-                ]
-                seen = set()
-                for j in range(n_sh - (window - 1)):
-                    m = min(hs[j : j + window])
-                    if m not in seen:
-                        seen.add(m)
-                        out_ids.append(i)
-                        out_fps.append(m)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_ids, type=pa.int64()),
-                    pa.array(out_fps, type=pa.string()),
-                ],
-                names=[id_col, "fp"],
-            )
-
-    return src.mapInArrow(fp_batches, f"{id_col} long, fp string")
+    fps_sql = (
+        f"CASE WHEN size(__hs) >= {window}"
+        f" THEN array_distinct(transform("
+        f"sequence(1, size(__hs) - {window - 1}),"
+        f" i -> array_min(slice(__hs, i, {window}))))"
+        f" ELSE CAST(array() AS array<string>) END"
+    )
+    return (
+        ensure_parallelism(df.select(F.col(id_col), F.col(text_col)), id_col)
+        .select(F.col(id_col), F.expr(wl).alias("__wl"))
+        .select(F.col(id_col), F.expr(shingles_sql).alias("__hs"))
+        .select(F.col(id_col), F.expr(f"explode({fps_sql})").alias("fp"))
+    )
 
 
 def winnow_pairs(

@@ -27,6 +27,8 @@ import functools
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from wikidatabots_spark.operators.dedup import ensure_parallelism
+
 STOPWORDS = ["the", "a", "an", "of", "to", "and", "in", "is", "on", "for"]
 
 # tiny marker lexicons for the language-ID heuristic
@@ -39,14 +41,6 @@ LANG_MARKERS: dict[str, list[str]] = {
 
 _PUNCT_RE = r"[^.,!?;:]"
 _SUBTOKEN_RE = r"[a-z]+|[0-9]+|[^a-z0-9\s]"
-
-# per-task cap of the Arrow kernels' str → int memos (token → bucket or
-# weight here, word/bigram → key in lm.py): an entry (a fresh 8-17 char
-# string, an int and its dict slot) measures 110-130 bytes under
-# tracemalloc, so 115-140 MB at the cap; past it a kernel hashes without
-# memoizing — same values, bounded memory
-MEMO_CAP = 1 << 20
-
 
 def words(text: Column) -> Column:
     """Lowercased whitespace tokens, empties removed."""
@@ -265,28 +259,20 @@ def gate_feature_counts(
     text_col: str = "text",
     keep_cols: tuple[str, ...] = ("source",),
 ) -> DataFrame:
-    """ALL integer counters of the curate gate stack in ONE
-    ``mapInArrow`` pass — the r14 fusion of the per-word work in
-    ``with_quality`` + ``with_lang_guess`` + ``with_repetition`` +
-    ``with_classifier_score`` (guide §4.2): the IN-list marker filters
-    (10 stopwords + 4×5 language markers per word), the 2/3-gram
-    concat+distinct builds, and the per-token md5 classifier weight all
-    ran as interpreted HOF lambdas (no codegen inside lambdas) — the
-    dominant CPU of every curate flagship after the shared-tokenization
-    fix. The kernel computes per document, from one tokenize:
+    """ALL integer counters of the curate gate stack in one projection
+    over one tokenize — the per-word work of ``with_quality`` +
+    ``with_lang_guess`` + ``with_repetition`` + ``with_classifier_score``
+    as the same SQL fragments, per document:
 
     n_words, n_chars, n_punct, n_stop, m_en/m_es/m_fr/m_de (marker
     occurrence counts), n_distinct, g2_tot/g2_distinct,
     g3_tot/g3_distinct (word-2/3-gram totals and distincts), wsum (the
-    ``_token_weight`` integer sum).
+    ``_WEIGHT_SQL`` integer sum).
 
-    Every output is an EXACT integer the expression form also derives
-    (md5 is engine-independent; sums/counts are order-free), so the
-    downstream doubles — assembled by :func:`gate_features_from_counts`
-    with the builders' own expression trees — are bit-identical, pinned
-    by ``test_gate_kernel_matches_builder_chain``. Tokenizer
-    equivalence notes as in ``winnow_fingerprints`` (Java ``\\s``
-    split class; ASCII lowercasing; codepoint ``length``).
+    Every output is an EXACT integer, so the downstream doubles —
+    assembled by :func:`gate_features_from_counts` with the builders'
+    own expression trees — are bit-identical to the builder chain,
+    pinned by ``test_gate_kernel_matches_builder_chain``.
 
     Rows with NULL ``text_col`` are OMITTED. The builder chain instead
     scores such a row ``quality 0.195 / lang 'und' / cls_score NULL``
@@ -294,113 +280,54 @@ def gate_feature_counts(
     every gate in ``plans.curation.gate_stack`` filters it out and its
     ``label`` is false-with-no-occurrence-rows — both paths contribute nothing, so
     dropping the row is output-equivalent for the gate consumers (not
-    for arbitrary outer-join callers; this is a gate-stack kernel).
+    for arbitrary outer-join callers; this is a gate-stack counter set).
     Token-free texts keep their row with zero counters, matching the
     builders' 0/0-guard branches.
+
+    From r14 to r15 this was a ``mapInArrow`` kernel; it was deleted
+    because it does not beat this form on total engine CPU (JVM plus
+    Python workers). Same-window A/B, ``gate_features_from_counts`` over
+    the documents table, 4-core VM, 10 alternating pairs, medians
+    (quartiles), CPU / wall: 500 docs, kernel 2.21 (1.90-2.28) /
+    0.70 s vs this form 1.15 (1.04-1.42) / 0.48 s; 5,000 docs, kernel
+    2.30 (2.27-2.54) / 0.83 s vs this form 2.04 (1.88-2.30) / 0.92 s —
+    this form cheaper in 10/10 pairs, the kernel faster in 7/10. The
+    kernel cut JVM CPU (2.04 → 0.47 s), but its Python workers took
+    1.90 s, ~1.2 s of which is the per-task worker cost of any Arrow
+    stage (``operators/kernels.py``).
     """
-    from collections.abc import Iterator
 
-    import pyarrow as pa
+    def n_in(values: list[str]) -> str:
+        return f"size(filter(__w, x -> x IN ({_sql_str_list(values)})))"
 
-    from wikidatabots_spark.operators.dedup import ensure_parallelism
-
-    src = ensure_parallelism(
-        df.select(
-            F.col(id_col), *[F.col(c) for c in keep_cols], F.col(text_col)
+    text = f"`{text_col}`"
+    counters = {
+        "n_words": "__nw",
+        "n_chars": f"length({text})",
+        "n_punct": f"length(regexp_replace({text}, '{_PUNCT_RE}', ''))",
+        "n_stop": n_in(STOPWORDS),
+        **{f"m_{lang}": n_in(m) for lang, m in LANG_MARKERS.items()},
+        "n_distinct": "size(array_distinct(__w))",
+        "g2_tot": "size(__g2)",
+        "g2_distinct": "size(array_distinct(__g2))",
+        "g3_tot": "size(__g3)",
+        "g3_distinct": "size(array_distinct(__g3))",
+        "wsum": (
+            f"aggregate(__w, CAST(0 AS BIGINT), (acc, w) -> acc + ({_WEIGHT_SQL}))"
         ),
-        id_col,
+    }
+    base = (
+        ensure_parallelism(df.select(id_col, *keep_cols, text_col), id_col)
+        .where(F.col(text_col).isNotNull())
+        .withColumn("__w", F.expr(_words_sql(text_col)))
+        .withColumn("__nw", F.expr("size(__w)"))
+        .withColumn("__g2", F.expr(_ngram_array_sql("__w", "__nw", 2)))
+        .withColumn("__g3", F.expr(_ngram_array_sql("__w", "__nw", 3)))
     )
-    n_keep = len(keep_cols)
-    dtypes = dict(src.dtypes)
-    counter_names = [
-        "n_words", "n_chars", "n_punct", "n_stop",
-        *[f"m_{lang}" for lang in LANG_MARKERS],
-        "n_distinct", "g2_tot", "g2_distinct", "g3_tot", "g3_distinct",
-        "wsum",
-    ]
-    stop_set = frozenset(STOPWORDS)
-    marker_sets = [frozenset(m) for m in LANG_MARKERS.values()]
-    punct_set = frozenset(".,!?;:")
-
-    def feature_batches(
-        batches: Iterator[pa.RecordBatch],
-    ) -> Iterator[pa.RecordBatch]:
-        import hashlib
-        import re
-
-        ws = re.compile("[ \\t\\n\\x0b\\f\\r]+")  # Java regex \s
-        wmemo: dict[str, int] = {}
-        half = (_CLS_RANGE - 1) // 2
-
-        def weight(w: str) -> int:
-            v = wmemo.get(w)
-            if v is None:
-                b = (
-                    int(hashlib.md5(w.encode("utf-8")).hexdigest()[:4], 16)
-                    % CLS_BUCKETS
-                )
-                v = (b * _CLS_MULT) % _CLS_RANGE - half
-                if len(wmemo) < MEMO_CAP:
-                    wmemo[w] = v
-            return v
-
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            keeps = [batch.column(1 + j).to_pylist() for j in range(n_keep)]
-            texts = batch.column(1 + n_keep).to_pylist()
-            out_ids: list = []
-            out_keeps: list[list] = [[] for _ in range(n_keep)]
-            cols: list[list[int]] = [[] for _ in counter_names]
-            for row, s in enumerate(texts):
-                if s is None:
-                    continue
-                wl = [w for w in ws.split(s.lower()) if w != ""]
-                nw = len(wl)
-                g2 = [wl[j] + " " + wl[j + 1] for j in range(nw - 1)]
-                g3 = [
-                    wl[j] + " " + wl[j + 1] + " " + wl[j + 2]
-                    for j in range(nw - 2)
-                ]
-                vals = (
-                    nw,
-                    len(s),
-                    sum(1 for ch in s if ch in punct_set),
-                    sum(1 for w in wl if w in stop_set),
-                    *[
-                        sum(1 for w in wl if w in ms)
-                        for ms in marker_sets
-                    ],
-                    len(set(wl)),
-                    len(g2),
-                    len(set(g2)),
-                    len(g3),
-                    len(set(g3)),
-                    sum(weight(w) for w in wl),
-                )
-                out_ids.append(ids[row])
-                for j in range(n_keep):
-                    out_keeps[j].append(keeps[j][row])
-                for c, v in zip(cols, vals):
-                    c.append(v)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_ids, type=batch.schema.field(0).type),
-                    *[
-                        pa.array(
-                            out_keeps[j], type=batch.schema.field(1 + j).type
-                        )
-                        for j in range(n_keep)
-                    ],
-                    *[pa.array(c, type=pa.int64()) for c in cols],
-                ],
-                names=[id_col, *keep_cols, *counter_names],
-            )
-
-    keep_schema = "".join(f"{c} {dtypes[c]}, " for c in keep_cols)
-    counter_schema = ", ".join(f"{c} long" for c in counter_names)
-    return src.mapInArrow(
-        feature_batches,
-        f"{id_col} {dtypes[id_col]}, {keep_schema}{counter_schema}",
+    return base.select(
+        id_col,
+        *keep_cols,
+        *[F.expr(f"CAST({e} AS BIGINT)").alias(n) for n, e in counters.items()],
     )
 
 
@@ -814,15 +741,13 @@ _CLS_MULT = 2654435761
 _CLS_RANGE = 2001  # weights in [-1000, 1000]
 
 
-def _token_weight(w: Column) -> Column:
-    """Integer weight of one token: md5 16-bit bucket -> multiplicative
-    hash into [-1000, 1000]."""
-    bucket = (
-        F.conv(F.substring(F.md5(w), 1, 4), 16, 10).cast("long") % CLS_BUCKETS
-    )
-    return (bucket * F.lit(_CLS_MULT)) % F.lit(_CLS_RANGE) - F.lit(
-        (_CLS_RANGE - 1) // 2
-    )
+# integer weight of the token ``w`` (a lambda variable) as a SQL
+# fragment: md5 16-bit bucket -> multiplicative hash into [-1000, 1000]
+_WEIGHT_SQL = (
+    f"((CAST(conv(substring(md5(w), 1, 4), 16, 10) AS BIGINT)"
+    f" % {CLS_BUCKETS}) * {_CLS_MULT}L) % {_CLS_RANGE}"
+    f" - {(_CLS_RANGE - 1) // 2}"
+)
 
 
 def _token_bucket(w: Column) -> Column:
@@ -840,113 +765,33 @@ def token_bucket_counts(
     text_col: str = "text",
     extra_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Per-document hashed-token bucket counts as ONE ``mapInArrow``
-    kernel: (id, *extra, bucket, cnt) — the shared engine under
-    :func:`bucket_occurrences` and ``plans.llmdata.dsir_occurrences``.
+    """Per-document hashed-token bucket counts: (id, *extra, bucket,
+    cnt) — the shared engine under :func:`bucket_occurrences` and
+    ``plans.llmdata.dsir_occurrences``. NULL and token-free texts emit
+    no rows.
 
-    r14 optimization (guide §4.2 + §2.4): the former form exploded one
-    row per token, ran ``_token_bucket`` (md5 + conv + mod) per token in
-    the interpreter, and shuffled (id, bucket) rows into a groupBy. The
-    kernel hands whole Arrow batches to C-backed ``hashlib.md5``/str
-    ops, memoizes repeated tokens, and emits the per-doc (bucket, cnt)
-    aggregate DIRECTLY — a doc's rows are complete within its own text,
-    so the groupBy exchange is gone, not moved (one less shuffle at any
-    scale).
+    Guarded by ``ensure_parallelism`` (guide §2.5 input skew): a
+    single-file corpus scan would otherwise run the whole
+    tokenize/hash/partial-agg stage in ONE task.
 
-    Exact equivalence with the expression form (pinned by
-    ``test_token_bucket_kernel_matches_expression_form``): the
-    tokenizer replicates Spark ``split(lower(text), '\\s+')`` — Java
-    regex ``\\s`` = ``[ \\t\\n\\x0B\\f\\r]`` (ASCII, unlike Python's
-    Unicode ``\\s``); ``str.lower()`` and JVM lowercasing agree on
-    ASCII (every corpus here); md5-of-UTF-8 is engine-independent, so
-    bucket ids are IDENTICAL integers, not a collision tradeoff. NULL
-    and token-free texts emit no rows, exactly like the explode.
+    From r14 to r15 this was a ``mapInArrow`` kernel that emitted the
+    per-doc counts without the groupBy exchange; it was deleted because
+    it loses to this form on total engine CPU (JVM plus Python
+    workers). Same-window A/B, ``bucket_occurrences`` over the
+    documents table, 4-core VM, 10 alternating pairs, medians
+    (quartiles), CPU / wall: 500 docs, kernel 1.68 (1.57-2.03) /
+    0.61 s vs this form 0.63 (0.56-0.73) / 0.30 s; 5,000 docs, kernel
+    1.85 (1.77-1.95) / 0.64 s vs this form 0.84 (0.81-0.93) / 0.41 s —
+    this form cheaper and faster in 10/10 pairs. Rows equal the kernel's
+    (``test_token_bucket_kernel_matches_expression_form``).
     """
-    from collections.abc import Iterator
-
-    import pyarrow as pa
-
-    from wikidatabots_spark.operators.dedup import ensure_parallelism
-
-    src = ensure_parallelism(
-        df.select(F.col(id_col), *[F.col(c) for c in extra_cols],
-                  F.col(text_col)),
-        id_col,
-    )
-    n_extra = len(extra_cols)
-
-    def bucket_batches(
-        batches: Iterator[pa.RecordBatch],
-    ) -> Iterator[pa.RecordBatch]:
-        import hashlib
-        import re
-        from collections import Counter
-
-        ws = re.compile("[ \\t\\n\\x0b\\f\\r]+")  # Java regex \s
-        # per-task token→bucket memo: corpora repeat tokens heavily
-        # (Zipf), so this removes most md5 calls; capped at MEMO_CAP
-        memo: dict[str, int] = {}
-
-        def bucket(w: str) -> int:
-            b = memo.get(w)
-            if b is None:
-                b = (
-                    int(hashlib.md5(w.encode("utf-8")).hexdigest()[:4], 16)
-                    % CLS_BUCKETS
-                )
-                if len(memo) < MEMO_CAP:
-                    memo[w] = b
-            return b
-
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            extras = [
-                batch.column(1 + j).to_pylist() for j in range(n_extra)
-            ]
-            texts = batch.column(1 + n_extra).to_pylist()
-            out_ids: list = []
-            out_extras: list[list] = [[] for _ in range(n_extra)]
-            out_buckets: list[int] = []
-            out_cnts: list[int] = []
-            for row, s in enumerate(texts):
-                if s is None:
-                    continue
-                counts = Counter(
-                    bucket(w) for w in ws.split(s.lower()) if w != ""
-                )
-                if not counts:
-                    continue
-                i = ids[row]
-                for b, c in counts.items():
-                    out_ids.append(i)
-                    for j in range(n_extra):
-                        out_extras[j].append(extras[j][row])
-                    out_buckets.append(b)
-                    out_cnts.append(c)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_ids, type=batch.schema.field(0).type),
-                    *[
-                        pa.array(out_extras[j], type=batch.schema.field(1 + j).type)
-                        for j in range(n_extra)
-                    ],
-                    pa.array(out_buckets, type=pa.int64()),
-                    pa.array(out_cnts, type=pa.int64()),
-                ],
-                names=[id_col, *extra_cols, "bucket", "cnt"],
-            )
-
-    extra_schema = "".join(
-        f"{c} {t}, "
-        for c, t in zip(
-            extra_cols,
-            [dict(src.dtypes)[c] for c in extra_cols],
-        )
-    )
-    return src.mapInArrow(
-        bucket_batches,
-        f"{id_col} {dict(src.dtypes)[id_col]}, {extra_schema}"
-        f"bucket long, cnt long",
+    keys = [id_col, *extra_cols]
+    return (
+        ensure_parallelism(df.select(*keys, text_col), id_col)
+        .select(*keys, F.explode(words(F.col(text_col))).alias("__w"))
+        .select(*keys, _token_bucket(F.col("__w")).alias("bucket"))
+        .groupBy(*keys, "bucket")
+        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
     )
 
 
@@ -958,13 +803,7 @@ def bucket_occurrences(
     compute it once (fence it if both run in one plan) and the text
     column never leaves the scan stage again.
 
-    Since r14 this is the :func:`token_bucket_counts` ``mapInArrow``
-    kernel (guide §4.2): same (id, bucket, cnt) rows — bucket ids are
-    EXACTLY the ``_token_bucket`` integers (md5 is engine-independent)
-    — with the per-token interpreted md5 moved to C-backed hashlib and
-    the per-doc groupBy exchange eliminated outright (a doc's counts
-    are complete within its own row). ``ensure_parallelism`` guards the
-    single-file local scan as before (guide §2.5)."""
+    See :func:`token_bucket_counts`."""
     return token_bucket_counts(df, id_col=id_col, text_col=text_col)
 
 
@@ -1118,13 +957,7 @@ def with_classifier_score(
     division — bit-identical across engines. Empty docs score null.
     """
     # rendered as SQL strings (r14 plan-build optimization, see
-    # _words_sql); the weight fragment is _token_weight verbatim.
-    # ``words_col``: see with_quality.
-    weight = (
-        f"((CAST(conv(substring(md5(w), 1, 4), 16, 10) AS BIGINT)"
-        f" % {CLS_BUCKETS}) * {_CLS_MULT}L) % {_CLS_RANGE}"
-        f" - {(_CLS_RANGE - 1) // 2}"
-    )
+    # _words_sql). ``words_col``: see with_quality.
     toks = words_col or "__toks"
     if words_col is None:
         df = df.withColumn("__toks", F.expr(_words_sql(text_col)))
@@ -1133,7 +966,7 @@ def with_classifier_score(
             "__wsum",
             F.expr(
                 f"aggregate({toks}, CAST(0 AS BIGINT),"
-                f" (acc, w) -> acc + ({weight}))"
+                f" (acc, w) -> acc + ({_WEIGHT_SQL}))"
             ),
         )
         .withColumn("__n", F.expr(f"CAST(size({toks}) AS BIGINT)"))

@@ -199,10 +199,10 @@ def gate_stack(
     rows carry the gate features with ``features``, else (doc_id,
     source).
 
-    ONE fused Arrow kernel computes every gate counter in a single
-    tokenize (guide §4.2) and ``gate_features_from_counts`` reassembles
-    the builders' own feature expression trees over those integers —
-    bit-identical features, parity-pinned in tests/test_operators.py.
+    ``gate_feature_counts`` computes every gate counter over a single
+    tokenize and ``gate_features_from_counts`` reassembles the builders'
+    own feature expression trees over those integers — bit-identical
+    features, parity-pinned in tests/test_operators.py.
     The fence is required: without it Catalyst substitutes the
     HOF-heavy score definitions into the gate predicate (measured 20x).
     """

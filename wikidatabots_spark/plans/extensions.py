@@ -318,12 +318,6 @@ FROM documents
 """
 
 
-@register("text_token_count", oracle=_TOKEN_COUNT_ORACLE)
-def text_token_count_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents")
-    return with_token_count(d).select("doc_id", "n_words", "n_subtokens")
-
-
 _QUALITY_ORACLE = f"""
 WITH feat AS (
     SELECT doc_id,
@@ -404,12 +398,6 @@ SELECT doc_id,
        md5(trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))) AS fingerprint
 FROM documents
 """
-
-
-@register("text_fingerprint", oracle=_FINGERPRINT_ORACLE)
-def text_fingerprint_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents")
-    return with_fingerprint(d).select("doc_id", "fingerprint")
 
 
 _PROFILE_ORACLE = f"""

@@ -914,11 +914,6 @@ def dsir_occurrences(d: DataFrame) -> DataFrame:
     training/scoring (the v8 flagship does exactly that)."""
     from wikidatabots_spark.operators.textstats import token_bucket_counts
 
-    # r14: the token_bucket_counts mapInArrow kernel (guide §4.2) —
-    # identical (doc_id, source, bucket, cnt) rows (md5 buckets are
-    # engine-exact), with the per-token interpreted md5 moved to
-    # C-backed hashlib and the (doc, source, bucket) groupBy exchange
-    # removed outright (per-doc counts complete within the row)
     return token_bucket_counts(d, extra_cols=("source",))
 
 
