@@ -62,6 +62,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from perfbench.procstat import ProcessTree  # noqa: E402
 from wikidatabots_spark import plans  # noqa: E402
 from wikidatabots_spark.session import get_spark  # noqa: E402
 
@@ -306,59 +307,6 @@ HARD_BARS = {
 }
 
 
-def _engine_cpu_seconds(seen: set[tuple[int, int]]) -> float:
-    """Cumulative CPU seconds of the whole local engine: every descendant
-    process of this bench process — the Spark JVM (driver AND executor
-    threads in local mode) plus its pyspark daemon/worker children (where
-    the Arrow-kernel work actually runs, invisible to JVM-side
-    ``executorCpuTime``). Per-run DELTAS of this counter are the
-    stall-immune CPU metric VERDICT r14 next #4 asks for: host scheduler
-    stalls inflate wall-clock but not CPU, and at 100 TB saved parallel
-    CPU is saved machines. Reaped children fold into their parent's
-    cutime/cstime, so deltas stay exact across worker churn. ``seen``
-    holds the (pid, start time) of every process the previous walk
-    counted, and is updated in place: a process seen earlier stays
-    counted after it is reparented out of this process's tree (a reused
-    pid has another start time), as ``perfbench/procstat.py`` tracks
-    them; one that then exits unreaped by the tree takes its time with
-    it, so callers clamp a per-pass delta at 0. A cgroup ``cpu.stat``
-    counter is not an option on a cgroup-v1 host whose processes sit in
-    the root ``cpu`` cgroup: there it counts the whole machine. A /proc
-    walk costs ~5 ms — read OUTSIDE the timed window, never inside it."""
-    me = os.getpid()
-    tick = os.sysconf("SC_CLK_TCK")
-    # pid -> (ppid, start time, utime + stime + cutime + cstime)
-    stats: dict[int, tuple[int, int, int]] = {}
-    for d in os.listdir("/proc"):
-        if not d.isdigit():
-            continue
-        try:
-            with open(f"/proc/{d}/stat", "rb") as f:
-                rest = f.read().rpartition(b")")[2].split()
-            stats[int(d)] = (
-                int(rest[1]),
-                int(rest[19]),
-                int(rest[11]) + int(rest[12]) + int(rest[13]) + int(rest[14]),
-            )
-        except (OSError, IndexError, ValueError):
-            continue
-    children: dict[int, list[int]] = {}
-    for pid, (ppid, _, _) in stats.items():
-        children.setdefault(ppid, []).append(pid)
-    todo = list(children.get(me, []))
-    todo += [p for p, start in seen if p in stats and stats[p][1] == start]
-    live: set[int] = set()
-    while todo:
-        pid = todo.pop()
-        if pid in live:
-            continue
-        live.add(pid)
-        todo.extend(children.get(pid, []))
-    seen.clear()
-    seen.update((pid, stats[pid][1]) for pid in live)
-    return sum(stats[pid][2] for pid in live) / tick
-
-
 def _parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     ap = argparse.ArgumentParser(description="Time the headline queries.")
     ap.add_argument(
@@ -450,7 +398,14 @@ def main() -> None:
     loadavg: dict[str, list[float]] = {name: [] for name in names}
     cpu_passes: dict[str, list[float]] = {name: [] for name in names}
     rows: dict[str, int] = {}
-    engine_procs: set[tuple[int, int]] = set()
+    # engine CPU: JVM + pyspark workers, one /proc walk per reading (no
+    # sampler thread); a process that starts and exits between two
+    # readings is not counted
+    procs = ProcessTree()
+
+    def engine_cpu() -> float:
+        cpu = procs.snapshot()
+        return cpu["jvm"] + cpu["pyworker"]
 
     def run_one(name: str) -> None:
         fn = plans.REGISTRY[name].fn
@@ -458,12 +413,12 @@ def main() -> None:
             last = _stages_after(spark.sparkContext, float("inf"))[0]
         # CPU counters read strictly OUTSIDE the timed window (before t0 /
         # after the wall measurement) — the wall timing is unchanged
-        c0 = _engine_cpu_seconds(engine_procs)
+        c0 = engine_cpu()
         t0 = time.perf_counter()
         rows[name] = fn(spark, sf_dir).count()
         passes[name].append(round(time.perf_counter() - t0, 4))
-        c1 = _engine_cpu_seconds(engine_procs)
-        cpu_passes[name].append(round(max(0.0, c1 - c0), 3))
+        c1 = engine_cpu()
+        cpu_passes[name].append(round(c1 - c0, 3))
         loadavg[name].append(round(os.getloadavg()[0], 2))
         if args.stages:
             print(
@@ -543,7 +498,7 @@ def main() -> None:
         # contention adjudicator (VERDICT r5 next #3)
         "loadavg": loadavg,
         # engine CPU seconds per pass (JVM + pyspark workers, /proc
-        # deltas outside the timed window — see _engine_cpu_seconds) and
+        # deltas outside the timed window — see engine_cpu) and
         # the per-query min: the stall-immune, scale-relevant metric
         # (VERDICT r14 next #4) — kernel wins show up here even when
         # sf0.1 wall is scheduling-bound

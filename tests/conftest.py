@@ -69,3 +69,58 @@ def pytest_runtest_makereport(item, call):
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+class InjectedCrash(RuntimeError):
+    pass
+
+
+@pytest.fixture
+def crash_at_every_step(monkeypatch, tmp_path):
+    """Fault injection over a store rewrite. ``run(proto, rewrite,
+    check)`` copies the ``proto`` directory to a fresh ``case`` and runs
+    ``rewrite(case)`` with the k-th filesystem mutation of its publish
+    (``os.rename``, ``os.symlink``, ``shutil.rmtree``) raising
+    ``InjectedCrash``, then ``check(case, k)``; k counts up from 0 until
+    a run completes uncrashed. Returns that k: the number of crash
+    points the rewrite has."""
+    import shutil
+
+    real = {
+        (os, "rename"): os.rename,
+        (os, "symlink"): os.symlink,
+        (shutil, "rmtree"): shutil.rmtree,
+    }
+
+    def run(proto, rewrite, check) -> int:
+        k = 0
+        while True:
+            case = tmp_path / f"case{k}"
+            shutil.copytree(proto, case, symlinks=True)
+            budget = [k]
+
+            def counted(fn):
+                def w(*a, **kw):
+                    if budget[0] <= 0:
+                        raise InjectedCrash(f"injected fault at op budget {k}")
+                    budget[0] -= 1
+                    return fn(*a, **kw)
+
+                return w
+
+            for (mod, name), fn in real.items():
+                monkeypatch.setattr(mod, name, counted(fn))
+            crashed = False
+            try:
+                rewrite(case)
+            except InjectedCrash:
+                crashed = True
+            finally:
+                for (mod, name), fn in real.items():
+                    monkeypatch.setattr(mod, name, fn)
+            check(case, k)
+            if not crashed:
+                return k
+            k += 1
+
+    return run

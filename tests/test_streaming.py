@@ -1179,7 +1179,7 @@ def test_compact_labels_preserves_view_and_bounds_partitions(spark, tmp_path):
 
 
 def test_compact_labels_crash_at_every_step_preserves_view(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, crash_at_every_step
 ):
     """Fault injection over the atomic label-store compaction (VERDICT
     r10 next #1): kill compact_labels at EVERY filesystem mutation of
@@ -1191,7 +1191,6 @@ def test_compact_labels_crash_at_every_step_preserves_view(
     compaction must succeed, and maintenance must keep composing to the
     full-recompute fixed point."""
     import os as _os
-    import shutil as _shutil
 
     from wikidatabots_spark.streaming.docs_stream import (
         compact_labels,
@@ -1235,45 +1234,12 @@ def test_compact_labels_crash_at_every_step_preserves_view(
         )
     )
 
-    class Crash(RuntimeError):
-        pass
+    def compact(case):
+        compact_labels(spark, str(case / "lbl"), keep_last=1)
 
-    real_rename, real_symlink, real_rmtree = (
-        _os.rename,
-        _os.symlink,
-        _shutil.rmtree,
-    )
-
-    k = 0
-    while True:
-        case = tmp_path / f"case{k}"
-        _shutil.copytree(proto, case, symlinks=True)
+    def check(case, k):
         lbl = str(case / "lbl")
         idx = str(case / "idx")
-        budget = [k]
-
-        def counted(fn):
-            def w(*a, **kw):
-                if budget[0] <= 0:
-                    raise Crash(f"injected fault at op budget {k}")
-                budget[0] -= 1
-                return fn(*a, **kw)
-
-            return w
-
-        monkeypatch.setattr(_os, "rename", counted(real_rename))
-        monkeypatch.setattr(_os, "symlink", counted(real_symlink))
-        monkeypatch.setattr(_shutil, "rmtree", counted(real_rmtree))
-        crashed = False
-        try:
-            compact_labels(spark, lbl, keep_last=1)
-        except Crash:
-            crashed = True
-        finally:
-            monkeypatch.setattr(_os, "rename", real_rename)
-            monkeypatch.setattr(_os, "symlink", real_symlink)
-            monkeypatch.setattr(_shutil, "rmtree", real_rmtree)
-
         # the served view is identical at this crash point
         assert view(lbl, idx) == want_view, f"view torn at crash point {k}"
         # recovery: compaction re-runs to completion and still serves
@@ -1296,9 +1262,8 @@ def test_compact_labels_crash_at_every_step_preserves_view(
             for r in latest_labels(spark, lbl).collect()
         }
         assert got == want_composed
-        if not crashed:
-            break  # budget exceeded the protocol's op count: clean run
-        k += 1
+
+    k = crash_at_every_step(proto, compact, check)
     assert k >= 3  # the protocol really has multiple distinct fault points
 
 
@@ -1416,7 +1381,9 @@ def test_ingest_pipeline_composed_replay_idempotent(spark, sf_dir, tmp_path):
     assert all(len(part) > 0 for part in once)
 
 
-def test_compact_rollup_state_crash_at_every_step(spark, sf_dir, tmp_path):
+def test_compact_rollup_state_crash_at_every_step(
+    spark, sf_dir, tmp_path, crash_at_every_step
+):
     """Fault injection over the rollup compaction's TWO sequential
     pointer swaps (partials, then user keys): a crash at ANY filesystem
     mutation — including between the two swaps, where the partials
@@ -1425,8 +1392,6 @@ def test_compact_rollup_state_crash_at_every_step(spark, sf_dir, tmp_path):
     alone; the key store is a distinct target, so an uncompacted key
     store merges identically). Recovery compaction then completes and
     the view still matches."""
-    import os as _os
-    import shutil as _shutil
 
     from wikidatabots_spark.sources.tables import load_table
     from wikidatabots_spark.streaming.events_stream import (
@@ -1452,43 +1417,16 @@ def test_compact_rollup_state_crash_at_every_step(spark, sf_dir, tmp_path):
 
     want = view(partials_path, keys_path)
 
-    class Crash(RuntimeError):
-        pass
+    def compact(case):
+        compact_rollup_state(spark, str(case / "partials"), str(case / "keys"))
 
-    real = (_os.rename, _os.symlink, _shutil.rmtree)
-    k = 0
-    while True:
-        case = tmp_path / f"case{k}"
-        _shutil.copytree(proto, case, symlinks=True)
+    def check(case, k):
         pp, kp = str(case / "partials"), str(case / "keys")
-        budget = [k]
-
-        def counted(fn):
-            def w(*a, **kw):
-                if budget[0] <= 0:
-                    raise Crash(f"fault at op {k}")
-                budget[0] -= 1
-                return fn(*a, **kw)
-
-            return w
-
-        _os.rename = counted(real[0])
-        _os.symlink = counted(real[1])
-        _shutil.rmtree = counted(real[2])
-        crashed = False
-        try:
-            compact_rollup_state(spark, pp, kp)
-        except Crash:
-            crashed = True
-        finally:
-            _os.rename, _os.symlink, _shutil.rmtree = real
-
         assert view(pp, kp) == want, f"view torn at crash point {k}"
         compact_rollup_state(spark, pp, kp)  # recovery completes
         assert view(pp, kp) == want
-        if not crashed:
-            break
-        k += 1
+
+    k = crash_at_every_step(proto, compact, check)
     assert k >= 4  # both swaps contribute distinct fault points
 
 
@@ -1649,8 +1587,10 @@ def test_compact_index_preserves_probe_candidates(spark, tmp_path):
     recompute."""
     import os as _os
 
+    from wikidatabots_spark.sinks.compaction import (
+        batch_ids as _store_batch_ids,
+    )
     from wikidatabots_spark.streaming.docs_stream import (
-        _store_batch_ids,
         compact_index,
         dedup_graph_maintenance,
         latest_labels,
@@ -1716,7 +1656,7 @@ def test_compact_index_preserves_probe_candidates(spark, tmp_path):
 
 
 def test_compact_index_crash_at_every_step_preserves_view(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, crash_at_every_step
 ):
     """Fault injection over the index/tombstone compaction: kill
     compact_index at EVERY python-side filesystem mutation (staged
@@ -1725,11 +1665,11 @@ def test_compact_index_crash_at_every_step_preserves_view(
     unchanged (the two publishes commute: materialized base rows plus
     not-yet-dropped old tombstones cannot double-suppress), a re-run
     completes the fold, and maintenance keeps composing."""
-    import os as _os
-    import shutil as _shutil
 
+    from wikidatabots_spark.sinks.compaction import (
+        batch_ids as _store_batch_ids,
+    )
     from wikidatabots_spark.streaming.docs_stream import (
-        _store_batch_ids,
         compact_index,
         dedup_graph_maintenance,
         latest_labels,
@@ -1770,45 +1710,13 @@ def test_compact_index_crash_at_every_step_preserves_view(
         )
     )
 
-    class Crash(RuntimeError):
-        pass
+    def compact(case):
+        idx = str(case / "idx")
+        compact_index(spark, idx, idx + "_tombstones", keep_last=1)
 
-    real_rename, real_symlink, real_rmtree = (
-        _os.rename,
-        _os.symlink,
-        _shutil.rmtree,
-    )
-
-    k = 0
-    while True:
-        case = tmp_path / f"case{k}"
-        _shutil.copytree(proto, case, symlinks=True)
+    def check(case, k):
         lbl = str(case / "lbl")
         idx = str(case / "idx")
-        budget = [k]
-
-        def counted(fn):
-            def w(*a, **kw):
-                if budget[0] <= 0:
-                    raise Crash(f"injected fault at op budget {k}")
-                budget[0] -= 1
-                return fn(*a, **kw)
-
-            return w
-
-        monkeypatch.setattr(_os, "rename", counted(real_rename))
-        monkeypatch.setattr(_os, "symlink", counted(real_symlink))
-        monkeypatch.setattr(_shutil, "rmtree", counted(real_rmtree))
-        crashed = False
-        try:
-            compact_index(spark, idx, idx + "_tombstones", keep_last=1)
-        except Crash:
-            crashed = True
-        finally:
-            monkeypatch.setattr(_os, "rename", real_rename)
-            monkeypatch.setattr(_os, "symlink", real_symlink)
-            monkeypatch.setattr(_shutil, "rmtree", real_rmtree)
-
         assert view(lbl, idx) == want_view, f"view torn at crash point {k}"
         # recovery completes the fold and bounds history
         compact_index(spark, idx, idx + "_tombstones", keep_last=1)
@@ -1823,9 +1731,8 @@ def test_compact_index_crash_at_every_step_preserves_view(
             for r in latest_labels(spark, lbl).collect()
         }
         assert got == want_composed
-        if not crashed:
-            break
-        k += 1
+
+    k = crash_at_every_step(proto, compact, check)
     assert k >= 3
 
 
@@ -1837,8 +1744,10 @@ def test_dedup_graph_auto_compaction_bounds_index_and_tombstones(
     bounded __batch_id partition count, old tombstones are folded away,
     and the served view still equals the full recompute on the
     survivors."""
+    from wikidatabots_spark.sinks.compaction import (
+        batch_ids as _store_batch_ids,
+    )
     from wikidatabots_spark.streaming.docs_stream import (
-        _store_batch_ids,
         dedup_graph_maintenance,
         latest_labels,
         read_band_index,
@@ -2001,6 +1910,166 @@ def test_compact_flagged_preserves_view(spark, sf_dir, tmp_path):
     assert sorted(parts) == ["__batch_id=1", "__batch_id=2"]
 
 
+def _flagged_fold_case(spark, sf_dir, store):
+    from wikidatabots_spark.sources.tables import load_table
+    from wikidatabots_spark.streaming.docs_stream import (
+        compact_flagged,
+        decontamination_gate,
+        flagged_documents,
+    )
+
+    d = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "source", "text"
+    )
+    gate = decontamination_gate(d.where(F.col("doc_id") % 7 == 0), store, n=5)
+    train = d.where(F.col("doc_id") % 7 != 0)
+    for i in range(3):
+        gate(train.where(F.col("doc_id") % 3 == i), i)
+
+    def view(path):
+        return {
+            (r.train_id, r.n_collided_grams, r.n_bench_docs)
+            for r in flagged_documents(spark, path).collect()
+        }
+
+    return lambda path: compact_flagged(spark, path, keep_last=1), view
+
+
+def _dsir_fold_case(spark, sf_dir, store):
+    from wikidatabots_spark.sources.tables import load_table
+    from wikidatabots_spark.streaming.docs_stream import (
+        compact_dsir_partials,
+        dsir_model_maintenance,
+        merged_dsir_model,
+    )
+
+    d = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "source", "text"
+    )
+    sink = dsir_model_maintenance(store)
+    for i in range(3):
+        sink(d.where(F.col("doc_id") % 3 == i), i)
+
+    def view(path):
+        return {
+            r.bucket: r.lr_ppm for r in merged_dsir_model(spark, path).collect()
+        }
+
+    return lambda path: compact_dsir_partials(spark, path, keep_last=1), view
+
+
+def _parquet_dir_fold_case(spark, sf_dir, store):
+    from wikidatabots_spark.sinks.compaction import (
+        compact_parquet_dir,
+        ensure_linked_store,
+    )
+
+    # born behind the pointer, as every store the sinks write is: a
+    # plain directory's first publish moves it aside (not atomic)
+    ensure_linked_store(store)
+    spark.range(0, 1_000).withColumn("v", F.col("id") * 2).repartition(
+        8
+    ).write.mode("append").parquet(store)
+
+    def view(path):
+        return sorted(map(tuple, spark.read.parquet(path).collect()))
+
+    return lambda path: compact_parquet_dir(spark, path), view
+
+
+@pytest.mark.parametrize(
+    "make_case",
+    [_flagged_fold_case, _dsir_fold_case, _parquet_dir_fold_case],
+    ids=["compact_flagged", "compact_dsir_partials", "compact_parquet_dir"],
+)
+def test_fold_crash_at_every_step_preserves_view(
+    spark, sf_dir, tmp_path, crash_at_every_step, make_case
+):
+    """Fault injection over the remaining store rewrites: a crash at
+    every filesystem mutation of the publish leaves the served view
+    identical, and a re-run of the rewrite completes, keeps the view
+    and leaves the store bounded (one base partition plus the kept
+    newest one, or one file)."""
+    import os as _os
+
+    proto = tmp_path / "proto"
+    proto.mkdir()
+    rewrite, view = make_case(spark, sf_dir, str(proto / "store"))
+    want = view(str(proto / "store"))
+    assert want
+
+    def check(case, k):
+        store = str(case / "store")
+        assert view(store) == want, f"view torn at crash point {k}"
+        rewrite(store)  # recovery completes
+        assert view(store) == want
+        names = _os.listdir(store)
+        parts = [n for n in names if n.startswith("__batch_id=")]
+        files = [n for n in names if n.endswith(".parquet")]
+        assert sorted(parts) == ["__batch_id=1", "__batch_id=2"] or (
+            not parts and len(files) == 1
+        )
+
+    def run(case):
+        rewrite(str(case / "store"))
+
+    assert crash_at_every_step(proto, run, check) >= 3
+
+
+def test_sinks_call_the_folds_by_module_global_name(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The sinks look their folds up as ``docs_stream`` module globals
+    at call time, which is how perfbench times them (``_COMPACTIONS``
+    swaps in timed wrappers by name; a sink calling the fold helper
+    directly would make ``sinks.compact_s`` read 0 without an error).
+    With ``compact_every=2``, two batches through the graph, gate and
+    DSIR sinks call each wrapped fold once."""
+    from wikidatabots_spark.sources.tables import load_table
+    from wikidatabots_spark.streaming import docs_stream
+
+    names = (
+        "compact_labels",
+        "compact_index",
+        "compact_flagged",
+        "compact_dsir_partials",
+    )
+    calls = dict.fromkeys(names, 0)
+
+    def counted(name, fn):
+        def call(*args, **kwargs):
+            calls[name] += 1
+            return fn(*args, **kwargs)
+
+        return call
+
+    for name in names:
+        monkeypatch.setattr(
+            docs_stream, name, counted(name, getattr(docs_stream, name))
+        )
+    d = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "source", "text"
+    )
+    gate = docs_stream.decontamination_gate(
+        d.where(F.col("doc_id") % 7 == 0),
+        str(tmp_path / "flagged"),
+        n=5,
+        compact_every=2,
+    )
+    graph = docs_stream.dedup_graph_maintenance(
+        str(tmp_path / "idx"), str(tmp_path / "lbl"), compact_every=2
+    )
+    dsir = docs_stream.dsir_model_maintenance(
+        str(tmp_path / "dsir"), compact_every=2
+    )
+    for i in range(2):
+        batch = d.where(F.col("doc_id") % 2 == i)
+        gate(batch, i)
+        graph(batch.select("doc_id", "text"), i)
+        dsir(batch, i)
+    assert calls == dict.fromkeys(names, 1)
+
+
 def test_run_staged_foreach_batch_delivers_engine_batches(spark, tmp_path):
     """The seated streaming queries' hash checks are valid under ANY
     batching, so they cannot distinguish three engine micro-batches
@@ -2055,8 +2124,10 @@ def test_real_stream_with_folds_and_deletes_matches_recompute(
     run inside engine triggers, between engine-committed batches. The
     final served view must equal the full recompute on survivors and
     every store must come out bounded."""
+    from wikidatabots_spark.sinks.compaction import (
+        batch_ids as _store_batch_ids,
+    )
     from wikidatabots_spark.streaming.docs_stream import (
-        _store_batch_ids,
         dedup_graph_maintenance,
         latest_labels,
         read_band_index,

@@ -223,3 +223,38 @@ def test_publish_dir_swap_serializes_concurrent_publishers(spark, tmp_path):
         n for n in os.listdir(str(tmp_path)) if n.startswith("store.v-")
     ]
     assert len(versions) == 2
+
+
+def test_upsert_parquet_crash_at_every_step_keeps_table_readable(
+    spark, tmp_path, crash_at_every_step
+):
+    """Fail an upsert at every filesystem mutation of its publish
+    (os.rename, os.symlink, shutil.rmtree): at each crash point the
+    table reads back complete, as the table before the upsert or after
+    it, and re-running the upsert converges on the merged table. A
+    rename-aside publish fails here: between its two renames the table
+    path does not exist."""
+    proto = tmp_path / "proto"
+    proto.mkdir()
+    b1 = spark.createDataFrame([(1, "a", 1), (2, "b", 1)], SCHEMA)
+    upsert_parquet(spark, str(proto / "t"), b1, "id", "version")
+    b2 = spark.createDataFrame(
+        [(1, "a9", 2, False), (2, "b", 2, True), (5, "e", 1, False)],
+        SCHEMA + ", _deleted boolean",
+    )
+    before = [(1, "a", 1), (2, "b", 1)]
+    after = [(1, "a9", 2), (5, "e", 1)]
+
+    def rows(table):
+        return sorted(map(tuple, spark.read.parquet(table).collect()))
+
+    def upsert(case):
+        upsert_parquet(spark, str(case / "t"), b2, "id", "version")
+
+    def check(case, k):
+        table = str(case / "t")
+        assert rows(table) in (before, after), f"table torn at crash point {k}"
+        upsert(case)  # a re-run converges
+        assert rows(table) == after
+
+    assert crash_at_every_step(proto, upsert, check) >= 3

@@ -1,24 +1,44 @@
-"""Small-file compaction: rewrite a parquet directory into size-targeted
-files.
+"""Parquet stores published behind a symlink pointer, and the rules
+every batch-partitioned store follows.
 
-Long-running ingest (streaming sinks, per-batch upserts, many small
-deliveries) accretes thousands of tiny parquet files; every subsequent
-scan then pays a task per file plus footer/open overhead — the classic
-operational tax at corpus scale (the same reason table formats ship
-OPTIMIZE). This utility rewrites a directory to ceil(total_bytes /
-target_bytes) files with an atomic directory swap (same publish
-protocol as ``sinks.upsert``).
+Publishing. A store path is a SYMLINK to an immutable sibling version
+directory (``path.v-<seq>-<uuid>``). A new version is written to a
+staged sibling directory and published by ONE ``os.rename`` of a fresh
+symlink over the old one (atomic on POSIX), so a reader holding the
+path resolves to a complete store at every instant, and a crash at any
+step leaves the previous version current (the staged directory is
+unreferenced garbage, swept by a later publish). Reads, appends and
+Spark's dynamic partition overwrite all resolve through the symlink.
+Publishers are serialized by a kernel flock (``sinks.locks``) held
+across rename, pointer swap and sweep. The sweep keeps the newest
+``keep_versions`` version directories, so a reader, or a lazy DataFrame
+whose files were listed through ``resolve_store`` before a publish,
+survives one publish. On an object store the symlink becomes a manifest
+pointer (the ``VersionedTable`` pattern).
 
-Ordering: pass ``order_by`` to lay rows out clustered (e.g. a z-order
-key from ``functions.scale.zorder_key``) — compaction is the natural
-moment to fix layout, since the data is being rewritten anyway. With
-``order_by`` the rewrite is a repartitionByRange (one shuffle, and the
-writer's per-file min/max column stats become selective); without it a
-coalesce(n) — no shuffle at all, pure file-count reduction.
+Batch-partitioned stores. The streaming sinks keep their state in
+stores partitioned by ``__batch_id``, under four rules:
 
-Scale: the operation is embarrassingly parallel and in production runs
-per PARTITION of a partitioned table (compact only partitions whose
-small-file count crossed a threshold), not over the whole corpus.
+- ``write_batch`` stamps a micro-batch's rows with its id and writes
+  them with dynamic partition overwrite: a replay of batch N (the
+  engine delivers foreachBatch at least once) replaces exactly its own
+  partitions, and no other batch's partition is touched.
+- ``read_store`` with ``before_batch=N`` reads only partitions below
+  N, so a replay that crashed after a partial write recomputes from
+  the pre-batch state.
+- ``fold_batches`` folds every partition but the newest ``keep_last``
+  into one base partition stamped with the highest folded id. The
+  newest partitions stay unfolded: a replay overwrites its own
+  partition, which must never be the base.
+- every rewrite goes through ``publish_frame``, the staged publish.
+
+Small files. ``compact_parquet_dir`` rewrites a directory to
+ceil(total_bytes / target_bytes) files. With ``order_by`` (e.g. a
+z-order key from ``functions.scale.zorder_key``) the rewrite is a
+repartitionByRange (one shuffle, and the per-file min/max stats become
+selective); without it a coalesce(n), no shuffle at all. In production
+it runs per partition of a partitioned table, on the partitions whose
+small-file count crossed a threshold.
 """
 
 from __future__ import annotations
@@ -28,40 +48,12 @@ import os
 import shutil
 import tempfile
 import uuid
+from collections.abc import Callable, Sequence
 
-from pyspark.sql import Column, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-# ---------------------------------------------------------------------------
-# Atomic directory publish (pointer swap)
-#
-# The r10 swap protocol renamed the live dir aside and the staged dir in
-# (two renames). ADVICE r10: between the two renames the store does not
-# exist — a concurrent reader throws and a crash strands the data at
-# `path + ".old"`, which then wedges the NEXT compaction's rename with
-# ENOTEMPTY. The fixed protocol keeps the table path as a SYMLINK to an
-# immutable sibling version directory (`path.v-<uuid>`): publishing is
-# one os.rename of a fresh symlink over the old one — atomic on POSIX,
-# so readers holding the path always resolve to a complete store and a
-# crash at ANY step leaves the previous version current (the staged
-# version dir is unreferenced garbage, swept by the next publish).
-# Writers are oblivious: reads, appends, and Spark's dynamic partition
-# overwrite all resolve through the symlink. This is the local-FS
-# realization of the VersionedTable manifest-pointer pattern; on an
-# object store the symlink becomes the manifest pointer.
-#
-# Concurrency (r12, VERDICT r11 next #3 + ADVICE r11): publishers are
-# SERIALIZED by an unlink-safe kernel flock (`sinks.locks`, the jsonl
-# sink's lock) held across stage-rename + pointer swap + sweep, and the
-# sweep RETAINS the newest `keep_versions` version dirs (default 2:
-# current + immediately previous) instead of only the current one — so
-# an in-flight reader, or a LAZY DataFrame whose file listing was
-# resolved through the pointer before a publish (trivially easy to
-# build in plan code), survives one publish instead of failing with
-# FileNotFoundException when finally executed. Version dirs carry a
-# monotonic sequence number so "newest" is well-defined across
-# publishers and restarts. Production beyond one host: a table format /
-# object-store manifest with conditional-put and time-travel retention.
-# ---------------------------------------------------------------------------
+from wikidatabots_spark.sinks.parquet import overwrite_partitions
 
 _PUBLISH_LOCK_SUFFIX = ".publock"
 
@@ -188,6 +180,123 @@ def _suppress_oserror():
     return contextlib.suppress(OSError)
 
 
+def has_parquet(path: str) -> bool:
+    """True iff ``path`` holds at least one parquet file. A batch with
+    no rows writes no partition (maybe a bare _SUCCESS marker), so an
+    existence check is not enough: reading such a directory throws
+    UNABLE_TO_INFER_SCHEMA."""
+    return any(
+        f.endswith(".parquet") for _root, _dirs, files in os.walk(path) for f in files
+    )
+
+
+def batch_ids(path: str) -> list[int]:
+    """The distinct ``__batch_id`` partition values anywhere in a store,
+    nested partitions included (the band index keeps them under
+    ``band_pfx=...``)."""
+    ids: set[int] = set()
+    for _root, dirs, _files in os.walk(path):
+        ids.update(
+            int(d.split("=", 1)[1]) for d in dirs if d.startswith("__batch_id=")
+        )
+    return sorted(ids)
+
+
+def write_batch(
+    df: DataFrame,
+    path: str,
+    batch_id: int,
+    *,
+    spread: Sequence[str],
+    partition_by: Sequence[str] = ("__batch_id",),
+) -> None:
+    """Write one micro-batch's rows to a batch-partitioned store, stamped
+    ``__batch_id = batch_id``, replacing only its own partitions. The
+    store is born behind the pointer. ``spread`` names a high-cardinality
+    column that lets a large batch still write in parallel (see
+    ``overwrite_partitions``)."""
+    ensure_linked_store(path)
+    overwrite_partitions(
+        df.withColumn("__batch_id", F.lit(batch_id)), path, partition_by, spread
+    )
+
+
+def read_store(
+    spark: SparkSession, path: str, schema: str, before_batch: int | None = None
+) -> DataFrame | None:
+    """The current version of a batch-partitioned store, read with its
+    pinned ``schema`` (a schema-inferring read costs a driver-side job
+    on every call), fenced at ``__batch_id < before_batch``. None while
+    the store holds no parquet file: the caller decides what an empty
+    store serves (an empty local frame is an RDD scan, which the
+    optimizer cannot prune from a join)."""
+    if not has_parquet(path):
+        return None
+    df = spark.read.schema(schema).parquet(resolve_store(path))
+    if before_batch is not None:
+        df = df.where(F.col("__batch_id") < F.lit(int(before_batch)))
+    return df
+
+
+def publish_frame(
+    df: DataFrame,
+    path: str,
+    partition_by: Sequence[str] = (),
+    spread: Sequence[str] = (),
+) -> None:
+    """Write ``df`` to a staged sibling directory and publish it as the
+    new version of ``path``. A partitioned write is repartitioned on the
+    partition columns (plus ``spread``) first, so it lands one file per
+    partition directory rather than one per task."""
+    tmp = tempfile.mkdtemp(
+        prefix="staged_", dir=os.path.dirname(os.path.abspath(path))
+    )
+    staged = os.path.join(tmp, "data")
+    if partition_by:
+        df = df.repartition(*partition_by, *spread)
+    w = df.write.mode("overwrite")
+    (w.partitionBy(*partition_by) if partition_by else w).parquet(staged)
+    publish_dir_swap(staged, path)
+    shutil.rmtree(tmp, ignore_errors=True)
+
+
+def fold_batches(
+    spark: SparkSession,
+    path: str,
+    merge: Callable[[DataFrame, int], DataFrame],
+    spread: Sequence[str],
+    *,
+    partition_by: Sequence[str] = ("__batch_id",),
+    keep_last: int = 1,
+    fold_one: Callable[[int], bool] = lambda base_id: False,
+) -> tuple[int, int | None]:
+    """Fold every ``__batch_id`` partition of a store but the newest
+    ``keep_last`` into one base partition, and publish the result.
+
+    ``merge(rows, base_id)`` turns the rows at or below ``base_id`` (the
+    highest folded id) into the base rows; they are re-stamped
+    ``__batch_id = base_id`` in the store's own type, so repeated folds
+    stay schema-stable, and the kept rows are unioned back unchanged.
+    A single folded partition is left as it is unless
+    ``fold_one(base_id)``. The read infers the schema: the fold keeps
+    whatever physical types the files hold. Returns the number of
+    partitions folded away and the base id (None if nothing was
+    folded)."""
+    ids = batch_ids(path)
+    fold = ids[:-keep_last] if keep_last > 0 else ids
+    if not fold or (len(fold) == 1 and not fold_one(fold[-1])):
+        return 0, None
+    base_id = fold[-1]
+    raw = spark.read.parquet(resolve_store(path))
+    bid = F.col("__batch_id")
+    base = merge(raw.where(bid <= F.lit(base_id)), base_id).withColumn(
+        "__batch_id", F.lit(base_id).cast(raw.schema["__batch_id"].dataType)
+    )
+    kept = raw.where(bid > F.lit(base_id)).select(*base.columns)
+    publish_frame(base.unionByName(kept), path, partition_by, spread)
+    return len(fold) - 1, base_id
+
+
 def compact_parquet_dir(
     spark: SparkSession,
     table_dir: str,
@@ -195,7 +304,8 @@ def compact_parquet_dir(
     order_by: list[Column] | None = None,
 ) -> int:
     """Rewrite ``table_dir`` into ~``target_bytes`` files; returns the
-    output file count. Atomic swap: readers see old or new, never both.
+    output file count. Readers see the old files or the new ones, never
+    both.
     """
     total = sum(
         os.path.getsize(os.path.join(table_dir, f))
@@ -210,11 +320,5 @@ def compact_parquet_dir(
         )
     else:
         df = df.coalesce(n_files)
-    tmp = tempfile.mkdtemp(
-        prefix="compact_", dir=os.path.dirname(os.path.abspath(table_dir))
-    )
-    staged = os.path.join(tmp, "staged")
-    df.write.mode("overwrite").parquet(staged)
-    publish_dir_swap(staged, table_dir)
-    shutil.rmtree(tmp, ignore_errors=True)
+    publish_frame(df, table_dir)
     return sum(1 for f in os.listdir(table_dir) if f.endswith(".parquet"))

@@ -49,23 +49,24 @@ def overwrite_partitions(
     df: DataFrame,
     path: str,
     partition_by: Sequence[str],
+    spread: Sequence[str] = (),
 ) -> None:
     """Incremental load: replace ONLY the partitions present in ``df``,
     leaving sibling partitions untouched (dynamic partition overwrite —
     the standard daily-batch upsert pattern without a lakehouse format).
+    The mode is a per-write option: with the session default (static)
+    the same call would wipe the whole table root.
 
-    With static overwrite (the default) the same call would wipe the
-    whole table root; the conf is set per-write and restored.
+    The rows are repartitioned on the partition columns first, so each
+    touched partition directory gets one AQE-sized file instead of one
+    per write task (tasks x partition values small files). ``spread``
+    adds high-cardinality columns to that key, so a large batch still
+    writes in parallel.
     """
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            df.repartition(*partition_by)
-            .write.mode("overwrite")
-            .partitionBy(*partition_by)
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        df.repartition(*partition_by, *spread)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_by)
+        .parquet(path)
+    )

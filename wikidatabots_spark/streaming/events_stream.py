@@ -288,7 +288,7 @@ def rollup_maintenance(
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         # stores live behind a symlink pointer from birth so the
         # compaction rewrite (`compact_rollup_state`) publishes with one
-        # atomic rename — no migration window, ever (ADVICE r10 low)
+        # atomic rename
         ensure_linked_store(partials_path)
         ensure_linked_store(user_keys_path)
         (
@@ -336,29 +336,13 @@ def compact_rollup_state(
     defining monoid, so pre-merging slices cannot change the served
     view; it only bounds the row count at keys (not keys × batches).
 
-    Both rewrites publish via ``sinks.compaction.publish_dir_swap``:
-    the store path is a symlink pointer retargeted by ONE atomic
-    rename, so readers see the old complete store or the new complete
-    store at every instant — no window where the path is absent, no
-    ``.old`` leftovers to wedge the next compaction (ADVICE r10 low;
-    the old two-rename protocol had both). Returns the compacted
-    partials row count.
+    Both rewrites publish via ``sinks.compaction.publish_frame``, so
+    readers see the old complete store or the new one at every instant.
+    The partials store is not folded by ``fold_batches``: it is not
+    partitioned by ``__batch_id``. Returns the compacted partials row
+    count.
     """
-    import os
-    import shutil
-    import tempfile
-
-    from wikidatabots_spark.sinks.compaction import publish_dir_swap
-
-    def _swap_rewrite(df: DataFrame, path: str) -> None:
-        tmp = tempfile.mkdtemp(
-            prefix="rollup_compact_",
-            dir=os.path.dirname(os.path.abspath(path)),
-        )
-        staged = os.path.join(tmp, "staged")
-        df.write.mode("overwrite").parquet(staged)
-        publish_dir_swap(staged, path)
-        shutil.rmtree(tmp, ignore_errors=True)
+    from wikidatabots_spark.sinks.compaction import publish_frame
 
     raw = spark.read.parquet(resolve_store(partials_path))
     top = raw.agg(F.max("__batch_id").alias("m")).first().m
@@ -383,8 +367,8 @@ def compact_rollup_state(
             F.lit(top).cast(raw.schema["__batch_id"].dataType),
         )
     )
-    _swap_rewrite(folded, partials_path)
-    _swap_rewrite(
+    publish_frame(folded, partials_path)
+    publish_frame(
         spark.read.parquet(resolve_store(user_keys_path)).distinct(), user_keys_path
     )
     return spark.read.parquet(partials_path).count()

@@ -79,8 +79,8 @@ def stream_upsert_parquet(
     """CDC ingestion end-to-end: a stream of keyed change rows is folded
     into the parquet table per micro-batch via ``foreachBatch`` +
     ``sinks.upsert.upsert_parquet`` — latest-wins, tombstones honored,
-    atomic directory swap per batch, so a reader always sees a complete
-    consistent table. The checkpoint makes delivery exactly-once at the
+    one atomic pointer swap per batch (``sinks.compaction``), so a
+    reader always sees a complete consistent table. The checkpoint makes delivery exactly-once at the
     BATCH level; within-batch the merge itself is idempotent (change
     rows at an already-applied version resolve identically), so a
     replayed batch after a crash converges to the same table — the
