@@ -112,6 +112,20 @@ def test_sample_n_exact(spark):
     assert out.count() == 7
 
 
+def test_unseeded_sample_n_reuses_generated_code(spark):
+    """A second unseeded sample of the same frame compiles no Java: its
+    randomness is not written into the generated source."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source
+    compiles = metrics.CodegenMetrics.METRIC_COMPILATION_TIME()
+    df = spark.range(1000).selectExpr("id", "id % 7 AS k")
+    first = {r.id for r in sample_n(df, 20).collect()}
+    before = compiles.getCount()
+    second = {r.id for r in sample_n(df, 20).collect()}
+    assert compiles.getCount() == before
+    assert len(first) == len(second) == 20
+    assert first != second  # fresh randomness per call: equal 1 in C(1000, 20)
+
+
 def test_sample_full_surface(spark):
     from wikidatabots_spark.functions.core import sample, sample_hash
 

@@ -11,6 +11,7 @@ Reference call sites are cited per helper (files under /root/reference).
 from __future__ import annotations
 
 import datetime
+import os
 import warnings
 from collections.abc import Sequence
 
@@ -148,6 +149,24 @@ def between_left_closed(col: Column | str, low, high) -> Column:
     return (c >= F.lit(low)) & (c < F.lit(high))
 
 
+def _random_order(seed: int | None) -> Column:
+    """A sort key that puts rows in random order: ``rand(seed)`` when
+    seeded, else a fresh string salt hashed with each row's
+    ``monotonically_increasing_id``.
+
+    An unseeded ``F.rand()`` draws its seed on the driver, and whole-stage
+    codegen writes that seed into the generated Java as a literal
+    (``new XORShiftRandom(-4336560173747316741L + partitionIndex)``), so
+    every call compiled new code: 4 Janino compiles of 20-30 ms per warm
+    ``reconcile`` iteration, 2 per RDF sink, and some iterations thrashed
+    the 100-entry code cache (13-34 compiles). A string literal is passed
+    to the generated class by reference, so the code is the same each call.
+    """
+    if seed is not None:
+        return F.rand(seed)
+    return F.xxhash64(F.lit(os.urandom(8).hex()), F.monotonically_increasing_id())
+
+
 def sample(
     df: DataFrame,
     n: int | None = None,
@@ -163,8 +182,9 @@ def sample(
     - ``fraction`` only → ``df.sample(fraction, seed)``: distributed
       Bernoulli (or Poisson when ``with_replacement``) coin-flip per row —
       no shuffle, pipeline-able with the scan. The scale path.
-    - ``n`` without replacement → seeded ``rand()`` sort + ``limit(n)``:
-      exact-n needs a global order; full shuffle of the candidate rows.
+    - ``n`` without replacement → random sort (:func:`_random_order`) +
+      ``limit(n)``: exact-n needs a global order; full shuffle of the
+      candidate rows.
       The reference only samples guard-capped frames (≤ a few hundred
       rows), so this matches its use; for large frames pass ``fraction``.
     - ``n`` with replacement → driver draws a multinomial over row indices
@@ -176,10 +196,10 @@ def sample(
     """
     if (n is None) == (fraction is None):
         raise ValueError("exactly one of n / fraction is required")
-    rand = F.rand(seed) if seed is not None else F.rand()
+    rand = _random_order(seed)
     if fraction is not None:
         out = df.sample(withReplacement=with_replacement, fraction=fraction, seed=seed)
-        return out.orderBy(F.rand(seed) if seed is not None else F.rand()) if shuffle else out
+        return out.orderBy(_random_order(seed)) if shuffle else out
     if not with_replacement:
         return df.orderBy(rand).limit(n)
     # exact-n WITH replacement: multinomial counts over row indices.
@@ -216,7 +236,7 @@ def sample(
         .withColumn("__rep", F.explode(F.sequence(F.lit(1), F.col("__cnt"))))
         .drop("__idx", "__cnt", "__rep")
     )
-    return out.orderBy(F.rand(seed) if seed is not None else F.rand()) if shuffle else out
+    return out.orderBy(_random_order(seed)) if shuffle else out
 
 
 def sample_n(

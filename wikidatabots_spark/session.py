@@ -26,6 +26,12 @@ from pyspark.sql import SparkSession
 # sink's 250 — the plan is unchanged.
 TOPK_SORT_FALLBACK = 1_000_000
 
+# The Python daemon's module and its directory, which holds nothing else
+# and is not a package: the daemon and its workers do not import this
+# package.
+DAEMON_MODULE = "spark_graft_daemon"
+DAEMON_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "pyworker")
+
 
 def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
     """Half the host's RAM, capped at 32g (32g when ``MemTotal`` cannot be
@@ -123,6 +129,19 @@ def get_spark(
         # 0.18-0.35 s and py4j-thread JVM CPU 1.3-1.4 -> 0.8-1.2 s. A
         # static conf: it must be set here, before the session exists.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Python workers fork from a daemon started from
+        # pyworker/spark_graft_daemon.py. On Python < 3.13 it stops each
+        # task from re-reading pyspark.zip's 1,328-entry directory once
+        # per zipimporter (14-16 per worker; setup_spark_files calls
+        # importlib.invalidate_caches before every task), and it freezes
+        # the daemon's objects out of the gc.collect() a reused worker
+        # runs after each task. 3.13 re-reads lazily: there only the
+        # freeze applies. Measured on a 4-core VM, identity mapInArrow
+        # over 500 rows, Python-worker CPU per job at 1/4/8/16
+        # partitions: 0.16/0.78/1.43/2.84 -> 0.01/0.06/0.11/0.27 s.
+        # Static confs, read when the daemon starts.
+        .config("spark.python.daemon.module", DAEMON_MODULE)
+        .config("spark.executorEnv.PYTHONPATH", DAEMON_DIR)
         # This host exhibits guest-invisible multi-minute stalls (the
         # bench protocol documents 1.4s ↔ 17s swings at idle loadavg;
         # r12 captured a 245s full-JVM freeze in a -s pytest log). At
